@@ -1,11 +1,14 @@
 """End-to-end TrialFrame facade + sources tests (reference API parity:
 data_model.py verbs, project_manager.py catalog, plugin_system.py)."""
 
+import gc
 import json
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark import TrialFrame
@@ -54,6 +57,96 @@ def test_edit_undo_redo_lineage(spark, trial_csvs):
     tf.redo()
     assert tf.df.count() == n1
     assert tf.deletions == [(0.02, 0.05)]
+
+
+def test_undo_redo_restore_sample_rate(spark, trial_csvs):
+    # the 120 Hz axis re-times to dt = 0.008 after a delete (rate 125);
+    # undo must bring the 120 Hz rate back with the 120 Hz frame, or the
+    # next derivative/integrate/Butterworth uses the wrong dt
+    tf = TrialFrame(spark).load_csv(trial_csvs)
+    assert tf.sample_rate == pytest.approx(120.0)
+    tf.delete_segment(0.02, 0.05)
+    assert tf.sample_rate == pytest.approx(125.0)
+    tf.undo()
+    assert tf.sample_rate == pytest.approx(120.0)
+    tf.redo()
+    assert tf.sample_rate == pytest.approx(125.0)
+
+
+def _cached(states):
+    return [d for d in states if d.storageLevel != StorageLevel.NONE]
+
+
+def _rows(df):
+    return df.toPandas().sort_values(["trial_id", "normalized_time"]).reset_index(drop=True)
+
+
+def _edit_session(tf, n_edits):
+    """Cycle through every verb that makes a state; returns each
+    distinct DataFrame the frame held, in order."""
+    states = [tf.df]
+    verbs = [
+        lambda: tf.apply(["score"], "moving_average", {"window": 3}),
+        lambda: tf.mark_bad(0.03, 0.06),
+        lambda: tf.annotate(0.0, 0.02, "blink"),
+        lambda: tf.apply(["gaze_heading_deg"], "interpolate", {"method": "linear"}),
+        lambda: tf.undo(),
+        lambda: tf.undo(),
+        lambda: tf.redo(),
+        lambda: tf.delete_segment(0.1, 0.11),
+    ]
+    for i in range(n_edits):
+        verbs[i % len(verbs)]()
+        if not any(tf.df is d for d in states):
+            states.append(tf.df)
+        assert len(_cached(states)) <= 3
+    return states
+
+
+def test_states_materialized_at_most_three_and_replayable(spark, trial_csvs):
+    tf = TrialFrame(spark).load_csv(trial_csvs)
+    states = _edit_session(tf, 20)
+    assert len(states) > 6
+    assert any(tf.df is d for d in _cached(states))
+    # every state, cached or lineage-only, gives the same rows after the
+    # cache is dropped: persisted states replay from their lineage
+    before = [_rows(d) for d in states]
+    spark.catalog.clearCache()
+    for d, want in zip(states, before):
+        pd.testing.assert_frame_equal(_rows(d), want)
+
+
+def test_states_released_on_reload_and_gc(spark, trial_csvs):
+    tf = TrialFrame(spark).load_csv(trial_csvs)
+    states = _edit_session(tf, 10)
+    assert _cached(states)
+    tf.load_csv(trial_csvs[:1])
+    assert _cached(states) == []
+    assert _cached([tf.df]) == [tf.df]
+    current = tf.df
+    del tf
+    gc.collect()
+    assert _cached([current]) == []
+
+
+def test_caller_cache_is_neither_doubled_nor_released(spark):
+    pdf = pd.DataFrame(
+        {
+            "trial_id": ["t1"] * 30,
+            "normalized_time": [i / 120.0 for i in range(30)],
+            "ch": [float(i) for i in range(30)],
+            "is_bad_segment": [False] * 30,
+        }
+    )
+    df = spark.createDataFrame(pdf).cache()
+    tf = TrialFrame(spark).set_dataframe(df)
+    assert tf.df is df
+    for k in range(4):
+        tf.mark_bad(k * 0.05, k * 0.05 + 0.02)
+    del tf
+    gc.collect()
+    assert _cached([df]) == [df]
+    df.unpersist()
 
 
 def test_annotation_persistence_roundtrip(spark, trial_csvs, tmp_path):
@@ -252,6 +345,23 @@ def test_reference_autosave_roundtrip(spark, trial_csvs, tmp_path):
     assert sorted(tf2.df.columns) == sorted(tf.df.columns)
     assert [a.label for a in tf2.annotations] == ["warmup", "blink"]
     assert tf2._id_counter == max(a.id for a in tf.annotations) + 1
+
+
+def test_restore_autosave_starts_a_new_history(spark, trial_csvs, tmp_path):
+    p = str(tmp_path / "autosave.json")
+    tf = TrialFrame(spark).load_csv(trial_csvs)
+    tf.annotate(1.0, 2.0, "warmup")
+    tf.autosave(p)
+    n = tf.df.count()
+    tf.delete_segment(0.02, 0.05).mark_bad(0.0, 0.01)
+    tf.undo()
+    tf.restore_autosave(p)
+    assert tf.history == [] and tf._undo == [] and tf._redo == []
+    # undo/redo cannot return to a frame from before the restore
+    tf.undo()
+    tf.redo()
+    assert tf.df.count() == n
+    assert [a.label for a in tf.annotations] == ["warmup"]
 
 
 def test_autosave_refuses_large_frames(spark, trial_csvs):

@@ -6,15 +6,26 @@ Where the reference snapshots the full table for undo
 undo stack holds **references to immutable DataFrames** — O(1) per
 operation; lineage replaces copies. The operation history doubles as a
 serializable recipe (SURVEY §3.3/§3.4).
+
+Memory model: every state the frame creates is persisted once
+(``MEMORY_AND_DISK``), so redraws, rate probes and saves read that copy
+instead of replaying the CSV scan and every earlier edit. At most three
+states stay materialized — the current one and the tops of the undo and
+redo stacks; the rest of the undo stack is lineage only. A persisted
+state is still replayable from its lineage if the cache is evicted or an
+executor is lost (no checkpoint truncates it). The frame releases its
+states on ``load_csv``, ``restore_autosave`` and garbage collection.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import weakref
 from dataclasses import asdict, dataclass, field
 from typing import Mapping, Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,6 +65,13 @@ class _State:
     annotations: list[AnnotationSegment]
     deletions: list[tuple[float, float]]
     history: list[OperationRecord]
+    sample_rate: float
+
+
+def _unpersist_all(owned: list[DataFrame]) -> None:
+    for df in owned:
+        df.unpersist()
+    owned.clear()
 
 
 class TrialFrame:
@@ -81,6 +99,9 @@ class TrialFrame:
         self._undo: list[_State] = []
         self._redo: list[_State] = []
         self._id_counter = 1
+        # states this frame persisted and has not released yet
+        self._owned: list[DataFrame] = []
+        weakref.finalize(self, _unpersist_all, self._owned).atexit = False
 
     # -- loading ----------------------------------------------------------
     def load_csv(self, path: str | Sequence[str]) -> "TrialFrame":
@@ -89,19 +110,46 @@ class TrialFrame:
         provenance column from ``input_file_name`` (S9)."""
         from time_series_data_trimmer_spark.sources.readers import read_trial_csv
 
-        self.df = read_trial_csv(self.spark, path, trial_key=self.trial_key)
-        self.df = _schema.ensure_bad_mask(self.df)
-        self.df = _schema.ensure_time_axis(self.df, trial_key=self.trial_key)
-        self.annotations, self.deletions, self.history = [], [], []
-        self._undo.clear()
-        self._redo.clear()
-        self._id_counter = 1
+        df = read_trial_csv(self.spark, path, trial_key=self.trial_key)
+        df = _schema.ensure_time_axis(_schema.ensure_bad_mask(df), trial_key=self.trial_key)
+        self._reset_session()
+        self._set_df(df)
+        # the rate probe is the job that fills the new state's cache
         self.sample_rate = self.infer_sample_rate()
         return self
 
     def set_dataframe(self, df: DataFrame) -> "TrialFrame":
-        self.df = _schema.ensure_bad_mask(df)
+        self._set_df(_schema.ensure_bad_mask(df))
         return self
+
+    def _reset_session(self) -> None:
+        self.annotations, self.deletions, self.history = [], [], []
+        self._undo.clear()
+        self._redo.clear()
+        self._id_counter = 1
+        self._release()
+
+    # -- state materialization --------------------------------------------
+    def _set_df(self, df: DataFrame) -> None:
+        """The one assignment of ``self.df``: release the states that
+        left the kept set, then persist the new one (a frame that is
+        already cached — a redo target, or the caller's own cache — is
+        not cached twice). Releasing first matters: an unpersist
+        re-plans every unfilled cache whose plan contains the released
+        state."""
+        self.df = df
+        self._release()
+        if df.storageLevel == StorageLevel.NONE:
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+            self._owned.append(df)
+
+    def _release(self) -> None:
+        """Unpersist every owned state other than the current one and
+        the tops of the undo and redo stacks."""
+        keep = [self.df] + [stack[-1].df for stack in (self._undo, self._redo) if stack]
+        for df in [d for d in self._owned if not any(d is k for k in keep)]:
+            df.unpersist()
+            self._owned.remove(df)
 
     def get_dataframe(self) -> DataFrame:
         return self.df
@@ -129,34 +177,33 @@ class TrialFrame:
         row = rates.agg(F.median("sample_rate").alias("r")).first()
         return float(row["r"]) if row and row["r"] is not None else fallback
 
-    # -- undo/redo: O(1) lineage references, not copies -------------------
-    def _push(self) -> None:
-        self._undo.append(
-            _State(self.df, list(self.annotations), list(self.deletions), list(self.history))
+    # -- undo/redo: O(1) references, at most 3 materialized ---------------
+    def _snapshot(self) -> _State:
+        return _State(
+            self.df, list(self.annotations), list(self.deletions), list(self.history),
+            self.sample_rate,
         )
+
+    def _push(self) -> None:
+        self._undo.append(self._snapshot())
         self._redo.clear()
+        self._release()  # the cleared redo top leaves the kept set
+
+    def _restore(self, src: list[_State], dst: list[_State]) -> None:
+        if not src:
+            return
+        dst.append(self._snapshot())
+        s = src.pop()
+        self.annotations, self.deletions, self.history, self.sample_rate = (
+            s.annotations, s.deletions, s.history, s.sample_rate,
+        )
+        self._set_df(s.df)
 
     def undo(self) -> None:
-        if not self._undo:
-            return
-        self._redo.append(
-            _State(self.df, list(self.annotations), list(self.deletions), list(self.history))
-        )
-        s = self._undo.pop()
-        self.df, self.annotations, self.deletions, self.history = (
-            s.df, s.annotations, s.deletions, s.history,
-        )
+        self._restore(self._undo, self._redo)
 
     def redo(self) -> None:
-        if not self._redo:
-            return
-        self._undo.append(
-            _State(self.df, list(self.annotations), list(self.deletions), list(self.history))
-        )
-        s = self._redo.pop()
-        self.df, self.annotations, self.deletions, self.history = (
-            s.df, s.annotations, s.deletions, s.history,
-        )
+        self._restore(self._redo, self._undo)
 
     # -- operators --------------------------------------------------------
     def apply(
@@ -170,10 +217,10 @@ class TrialFrame:
         (filter_engine.py:25-91, data_model.py:365-372)."""
         self._push()
         params = dict(params or {})
-        self.df = apply_filter(
+        self._set_df(apply_filter(
             self.df, channels, filter_type, params, selection,
             trial_key=self.trial_key, time_col=self.time_col, sample_rate=self.sample_rate,
-        )
+        ))
         if filter_type == "resample":
             self.sample_rate = float(params.get("target_fs", self.sample_rate))
         start, end = (selection if selection else (0.0, 0.0))
@@ -190,16 +237,17 @@ class TrialFrame:
         if start >= end:
             return self
         self._push()
-        self.df = _edits.delete_segment(
+        self._set_df(_edits.delete_segment(
             self.df, start, end,
             trial_key=self.trial_key, time_col=self.time_col, sample_rate=self.sample_rate,
-        )
+        ))
         self.deletions.append((start, end))
         self.history.append(OperationRecord("delete_segment", {}, start, end))
         # post-delete rate uses the reference's 3-decimal formula
         # round(1/max(dt, 1e-6), 3) (data_model.py:187) via
         # post_delete_sample_rate — NOT infer_sample_rate's 2-decimal
         # round(1/median_dt, 2), which drifts by the rounding digit.
+        # This probe is the job that fills the new state's cache.
         rates = _edits.post_delete_sample_rate(
             self.df, trial_key=self.trial_key, time_col=self.time_col
         )
@@ -212,7 +260,7 @@ class TrialFrame:
         if start >= end:
             return self
         self._push()
-        self.df = _edits.mark_bad(self.df, start, end, time_col=self.time_col)
+        self._set_df(_edits.mark_bad(self.df, start, end, time_col=self.time_col))
         self.history.append(OperationRecord("mark_bad", {}, start, end))
         return self
 
@@ -416,6 +464,9 @@ class TrialFrame:
         with open(path, "r", encoding="utf-8") as f:
             state = json.load(f)
         data = state.get("data")
+        # a restored session starts a new history: undo must not return
+        # to a frame from before the restore
+        self._reset_session()
         if data:
             self.set_dataframe(self.spark.createDataFrame(pd.DataFrame(data)))
         self.annotations = [
