@@ -6,8 +6,8 @@ segments via the gaps-and-islands suggestion operator — scan →
 partitioned window agg (F9) → lag-diff (F7-shaped deriv) → A5 islands.
 
 ``queries()`` / ``oracle_sql()`` expose every implemented SURVEY §2
-operator with a DuckDB oracle (see
-``time_series_data_trimmer_spark/queries.py``).
+operator with a DuckDB oracle (``queries.py`` plus every
+``queries_fam`` module, loaded by ``queries_fam.load_registry``).
 """
 
 from __future__ import annotations
@@ -20,10 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from time_series_data_trimmer_spark.queries import REGISTRY  # noqa: E402
-import time_series_data_trimmer_spark.queries_ext  # noqa: E402,F401  (fills REGISTRY)
-import time_series_data_trimmer_spark.queries_parity  # noqa: E402,F401  (fills REGISTRY)
-import time_series_data_trimmer_spark.queries_compose  # noqa: E402,F401  (fills REGISTRY)
+from time_series_data_trimmer_spark.queries_fam import load_registry  # noqa: E402
+
+REGISTRY = load_registry()
 
 
 def entry(spark: SparkSession) -> DataFrame:

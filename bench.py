@@ -20,10 +20,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from time_series_data_trimmer_spark.queries import REGISTRY
-import time_series_data_trimmer_spark.queries_ext  # noqa: F401  (fills REGISTRY)
-import time_series_data_trimmer_spark.queries_parity  # noqa: F401  (fills REGISTRY)
+from time_series_data_trimmer_spark.queries_fam import load_registry
 from time_series_data_trimmer_spark.session import get_spark
+
+REGISTRY = load_registry()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -461,9 +461,13 @@ def run_query(spark, name: str, sf_dir: str) -> float:
 
 
 def main() -> None:
+    # a renamed or unloaded headline/probe query must stop the bench,
+    # not silently shrink the total it reports
+    missing = [n for n in [*HEADLINE, *PROBE_BASELINE_SEC] if n not in REGISTRY]
+    if missing:
+        raise SystemExit(f"bench: not in the registry: {missing}")
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    names = [n for n in HEADLINE if n in REGISTRY]
     timings: dict[str, float] = {}
     run_samples: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
@@ -484,8 +488,6 @@ def main() -> None:
         # expose. One warmup happened with the first probe round.
         rnd: dict = {"after_query": after_query}
         for p in PROBE_BASELINE_SEC:
-            if p not in REGISTRY:
-                continue
             try:
                 t = run_query(spark, p, SF_DIR)
                 probe_samples[p].append(t)
@@ -503,14 +505,13 @@ def main() -> None:
     # (r13: was every quarter; a contended stretch shorter than ~75
     # queries was invisible between rounds — ~37 now).
     for p in PROBE_BASELINE_SEC:
-        if p in REGISTRY:
-            try:
-                run_query(spark, p, SF_DIR)  # probe warmup, untimed
-            except Exception:  # noqa: BLE001
-                pass
+        try:
+            run_query(spark, p, SF_DIR)  # probe warmup, untimed
+        except Exception:  # noqa: BLE001
+            pass
     run_probes(0)
-    probe_every = max(1, (len(names) + 7) // 8)
-    for qi, name in enumerate(names, start=1):
+    probe_every = max(1, (len(HEADLINE) + 7) // 8)
+    for qi, name in enumerate(HEADLINE, start=1):
         # steady-state measurement: first run pays one-time analysis/
         # codegen-compile costs (irrelevant at 100 TB where execution
         # dominates planning); record the best of two steady-state runs
@@ -539,8 +540,8 @@ def main() -> None:
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
         if qi % probe_every == 0:
             run_probes(qi)
-    if len(names) % probe_every != 0:
-        run_probes(len(names))  # end-of-run round (the modulo can skip it)
+    if len(HEADLINE) % probe_every != 0:
+        run_probes(len(HEADLINE))  # end-of-run round (the modulo can skip it)
     ratios = sorted(
         t / PROBE_BASELINE_SEC[p]
         for p, ts in probe_samples.items()
@@ -593,7 +594,7 @@ def main() -> None:
         "cpus": cpus,
         # min-of-two steady runs since r02 (r01/BASELINE: single run)
         "timing_rule": "min_of_2_steady",
-        "headline_set": f"headline-{len(names)}q",
+        "headline_set": f"headline-{len(HEADLINE)}q",
         "compare_set": "v1",
         "compare_set_total_sec": compare_total,
         "compare_set_n": compare_n,

@@ -64,8 +64,8 @@ def main() -> None:
     print(f"survivors: {kept.count()} of {docs.count()}")
 
     # 3. bias audit: what did dedup remove, per source? (exact-dup lens)
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    from time_series_data_trimmer_spark.queries_fam import load_registry
+    REGISTRY = load_registry()
 
     profile, _sql = REGISTRY["dedup_removed_vs_kept_profile"]
     rows = profile(spark, SF_DIR).orderBy("source", "fate").collect()

@@ -21,8 +21,8 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 def main() -> None:
     from time_series_data_trimmer_spark.session import get_spark
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    from time_series_data_trimmer_spark.queries_fam import load_registry
+    REGISTRY = load_registry()
 
     spark = get_spark("monitoring-pipeline")
 

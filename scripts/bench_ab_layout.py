@@ -40,9 +40,11 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from time_series_data_trimmer_spark.queries import REGISTRY, _events
-import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+from time_series_data_trimmer_spark.queries import _events
+from time_series_data_trimmer_spark.queries_fam import load_registry
 from time_series_data_trimmer_spark.session import get_spark
+
+REGISTRY = load_registry()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 QUERIES = ["e1_frame_transform", "f1_moving_average"]

@@ -36,10 +36,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
-    import time_series_data_trimmer_spark.queries_parity  # noqa: F401
-    import time_series_data_trimmer_spark.queries_compose  # noqa: F401
+    from time_series_data_trimmer_spark.queries_fam import load_registry
+
+    REGISTRY = load_registry()
 
     files = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
     verified: set[str] = set()

@@ -21,11 +21,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from time_series_data_trimmer_spark.queries import REGISTRY
-import time_series_data_trimmer_spark.queries_ext  # noqa: F401
-import time_series_data_trimmer_spark.queries_parity  # noqa: F401
-import time_series_data_trimmer_spark.queries_compose  # noqa: F401
+from time_series_data_trimmer_spark.queries_fam import load_registry
 from time_series_data_trimmer_spark.session import get_spark
+
+REGISTRY = load_registry()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

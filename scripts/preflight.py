@@ -7,7 +7,7 @@ Run this before ANY commit that touches `time_series_data_trimmer_spark/operator
 or `time_series_data_trimmer_spark/queries*` — especially end-of-round snapshots:
 
     python scripts/preflight.py            # changed-module-targeted
-    python scripts/preflight.py --all      # full 139-query oracle run
+    python scripts/preflight.py --all      # full oracle run, every query
     python scripts/preflight.py q1 q2 ...  # explicit query names
 
 What it does:
@@ -15,20 +15,25 @@ What it does:
    (`tests/test_plan_shapes.py::test_registry_sweep_global_invariants`) —
    this analyzes every registered query's plan, so ANY AnalysisException
    introduced anywhere in the registry fails here in seconds.
-2. Determines affected queries: for each operator/function module
-   changed per `git diff --name-only HEAD` (staged + unstaged), finds
-   every registered query whose source references that module's import
-   alias, and runs `scripts/check_oracle.py` on exactly those at
-   sf0.001 (exact DuckDB comparison, small data, fast).
+2. Determines affected queries from the files changed per
+   `git diff --name-only HEAD` (staged + unstaged + untracked). A
+   change to a registry module (`queries.py`, `queries_common.py`,
+   `queries_fam/*`) means every query. Otherwise a query is affected
+   when a package module its code reaches (the globals it names,
+   followed through registry helpers and REGISTRY lookups by name)
+   is, or transitively imports, a changed module. Runs
+   `scripts/check_oracle.py` on exactly those at sf0.001 (exact
+   DuckDB comparison, small data, fast).
 
 Exit code 0 == safe to commit.
 """
 
 from __future__ import annotations
 
+import ast
+import importlib.util
 import inspect
 import os
-import re
 import subprocess
 import sys
 
@@ -56,63 +61,123 @@ def changed_files() -> list[str]:
     return [f for f in (out + extra).splitlines() if f.strip()]
 
 
-def module_aliases() -> dict[str, set[str]]:
-    """Map repo-relative module path -> the import aliases the query
-    registries use for it (parsed from their import statements)."""
-    alias_map: dict[str, set[str]] = {}
-    pat = re.compile(
-        rf"from {PKG}(?:\.([\w.]+))? import ([\w]+)(?: as ([\w]+))?"
-    )
-    for regfile in ("queries.py", "queries_ext.py", "queries_parity.py"):
-        path = os.path.join(REPO, PKG, regfile)
-        with open(path) as fh:
-            for line in fh:
-                m = pat.match(line.strip())
-                if not m:
-                    continue
-                sub, name, alias = m.groups()
-                modpath = f"{PKG}/{sub.replace('.', '/')}" if sub else PKG
-                # `from pkg.operators import dedup as dd` -> module file
-                # pkg/operators/dedup.py, alias dd. `from pkg.operators.filters
-                # import apply_filter` -> module file pkg/operators/filters.py,
-                # alias apply_filter (a function name works the same for the
-                # source-reference scan).
-                cand_file = f"{modpath}/{name}.py"
-                if os.path.exists(os.path.join(REPO, cand_file)):
-                    key = cand_file
-                else:
-                    key = f"{modpath}.py"
-                alias_map.setdefault(key, set()).add(alias or name)
-    return alias_map
+def _registry_module(name: str) -> bool:
+    return name == f"{PKG}.queries" or name.startswith(f"{PKG}.queries_")
+
+
+def _pkg_files() -> dict[str, str]:
+    """Every module of the package, imported or not: name -> repo path."""
+    out: dict[str, str] = {}
+    for root, _dirs, names in os.walk(os.path.join(REPO, PKG)):
+        for fname in names:
+            if fname.endswith(".py"):
+                rel = os.path.relpath(os.path.join(root, fname), REPO)
+                mod = rel[:-3].replace(os.sep, ".")
+                out[mod.removesuffix(".__init__")] = rel
+    return out
+
+
+def _owner(obj) -> str | None:
+    """The package module an imported global comes from, if any."""
+    name = obj.__name__ if inspect.ismodule(obj) else getattr(obj, "__module__", None)
+    return name if isinstance(name, str) and name.startswith(PKG) else None
+
+
+def _imports(name: str, path: str, files: dict[str, str]) -> set[str]:
+    """Package modules one package module imports anywhere in its
+    source, function-local and relative imports included. `from pkg
+    import sub` depends on the submodule, not on pkg's __init__."""
+    with open(os.path.join(REPO, path)) as fh:
+        tree = ast.parse(fh.read())
+    pkg = name if path.endswith("__init__.py") else name.rpartition(".")[0]
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            base = importlib.util.resolve_name(
+                "." * node.level + (node.module or ""), pkg
+            ) if node.level else node.module
+            subs = {f"{base}.{a.name}" for a in node.names}
+            out |= subs if subs <= files.keys() else subs | {base}
+    return out & files.keys()
+
+
+def _module_closure(files: dict[str, str]) -> dict[str, set[str]]:
+    """Module name -> itself plus every package module it imports,
+    directly or transitively."""
+    deps = {n: _imports(n, p, files) | {n} for n, p in files.items()}
+    changed = True
+    while changed:
+        changed = False
+        for n, ds in deps.items():
+            grown = set().union(*(deps[d] for d in ds))
+            if grown != ds:
+                deps[n], changed = grown, True
+    return deps
+
+
+def _query_modules(fn, registry, names: set[str]) -> set[str]:
+    """Non-registry package modules one registered query reaches: the
+    globals and function-local imports its code (nested code included)
+    names, followed through functions defined in registry modules and
+    through queries it looks up by name."""
+    seen: set[int] = set()
+    out: set[str] = set()
+    stack = [fn]
+    while stack:
+        f = stack.pop()
+        if id(f) in seen:
+            continue
+        seen.add(id(f))
+        codes, refs = [f.__code__], []
+        while codes:
+            co = codes.pop()
+            for k in co.co_consts:
+                if inspect.iscode(k):
+                    codes.append(k)
+                elif isinstance(k, str) and k in registry:
+                    refs.append(registry[k][0])
+            refs += [f.__globals__[n] for n in co.co_names if n in f.__globals__]
+            # a function-local import names its module in co_names
+            for n in set(co.co_names) & names:
+                mod = sys.modules.get(n)
+                if mod is None:
+                    out.add(n)
+                else:  # a package counts only through what is taken from it
+                    refs += [getattr(mod, x) for x in co.co_names if hasattr(mod, x)]
+                    refs += [] if hasattr(mod, "__path__") else [mod]
+        for v in refs:
+            o = _owner(v)
+            if o not in names:
+                continue
+            if not _registry_module(o):
+                out.add(o)
+            elif inspect.isfunction(v):
+                stack.append(v)
+    return out
 
 
 def affected_queries(files: list[str]) -> set[str] | None:
-    """None == run everything (a registry file itself changed)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
-    import time_series_data_trimmer_spark.queries_parity  # noqa: F401
+    """None == run everything (a registry module itself changed)."""
+    from time_series_data_trimmer_spark.queries_fam import load_registry
 
-    reg_files = {f"{PKG}/queries.py", f"{PKG}/queries_ext.py", f"{PKG}/queries_parity.py"}
-    if any(f in reg_files for f in files):
+    registry = load_registry()
+    pkg_files = _pkg_files()
+    by_file = {path: name for name, path in pkg_files.items()}
+    hit = {by_file[f] for f in files if f in by_file}
+    if any(_registry_module(n) for n in hit):
         return None
-    amap = module_aliases()
-    hit_aliases: set[str] = set()
-    for f in files:
-        if f in amap:
-            hit_aliases |= amap[f]
-    if not hit_aliases:
+    if not hit:
         return set()
-    alias_pat = re.compile(
-        r"\b(" + "|".join(re.escape(a) for a in sorted(hit_aliases)) + r")\b"
-    )
+    closure = _module_closure(pkg_files)
+    names = set(pkg_files)
     out: set[str] = set()
-    for name, (fn, _sql) in REGISTRY.items():
-        try:
-            src = inspect.getsource(fn)
-        except OSError:
+    for name, (fn, _sql) in registry.items():
+        if not inspect.isfunction(fn):
             out.add(name)  # can't inspect -> be safe, include it
             continue
-        if alias_pat.search(src):
+        if any(hit & closure[m] for m in _query_modules(fn, registry, names)):
             out.add(name)
     return out
 

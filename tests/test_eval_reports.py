@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 from time_series_data_trimmer_spark.operators import dedup as dd
-from time_series_data_trimmer_spark.queries_ext import (
+from time_series_data_trimmer_spark.queries_common import (
     _EVAL_TAUS,
     _candidate_eval_frame,
 )

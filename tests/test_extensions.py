@@ -15,6 +15,7 @@ from time_series_data_trimmer_spark.plans.recipe import (
     derived_channel,
     validate_expression,
 )
+from time_series_data_trimmer_spark.queries_fam import load_registry
 
 
 # -- recipe / plugin compiler ------------------------------------------------
@@ -478,8 +479,7 @@ def test_spearman_matches_pure_python(spark):
     import math
 
     from pyspark.sql import functions as F
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     sf = "/root/testdata/sf0.001"
     got = {

@@ -151,11 +151,28 @@ def test_detrend(spark):
 
 
 def test_interpolate_linear(spark):
-    assert_matches(
-        spark, [None, None, 2, None, None, 8, None, 4, None], "interpolate",
-        {"method": "linear"},
-        lambda s: s.interpolate(method="linear", limit_direction="both"),
-    )
+    for values in (
+        [None, None, 2, None, None, 8, None, 4, None],
+        # several gaps of different widths per trial, adjacent valid
+        # values, and runs of leading and trailing NULLs
+        [None, None, None, 3, None, -1, 5, None, None, None, 2.5, 7, None, 1,
+         None, None],
+    ):
+        assert_matches(
+            spark, values, "interpolate",
+            {"method": "linear"},
+            lambda s: s.interpolate(method="linear", limit_direction="both"),
+        )
+
+
+def test_interpolate_linear_tied_times(spark):
+    # duplicate timestamps give no row order to follow; the fill must
+    # still pick its neighbours from one consistent order: every gap is
+    # filled, within the range of the valid values, without error
+    df, _ = _mk(spark, [1, None, 3, None, None, 6, None, 8])
+    df = df.withColumn("normalized_time", (df["normalized_time"] / 2).cast("int"))
+    got = apply_filter(df, ["ch"], "interpolate", {"method": "linear"}).toPandas()
+    assert len(got) == 16 and got["ch"].between(1.0, 8.0).all()
 
 
 def test_savgol_kernel(spark):

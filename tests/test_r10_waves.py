@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 
 from time_series_data_trimmer_spark.operators import intervals as iv
 from time_series_data_trimmer_spark.operators import text as tx
+from time_series_data_trimmer_spark.queries_fam import load_registry
 
 HOUR = 3_600_000_000
 
@@ -180,8 +181,7 @@ def test_interleave_prefix_mix_with_dominant_source(spark, tmp_path):
     slot of the target mix — the SWRR guarantee the query documents."""
     import os
 
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     # shares ~ [0.625, 0.25, 0.125]: src0 dominant
     rows = []
@@ -219,8 +219,7 @@ def test_tost_negative_variance_clamp(spark, tmp_path):
     import datetime
     import os
 
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     base = datetime.datetime(2024, 1, 1)
     rows = [

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.operators import intervals as iv
 from time_series_data_trimmer_spark.operators import text as tx
+from time_series_data_trimmer_spark.queries_fam import load_registry
 
 
 def _docs(spark):
@@ -117,8 +118,7 @@ def test_waterfill_allocation_properties(spark):
     full availability, capped sources all get the same level, the
     total never exceeds the budget, and a budget >= total funds
     everyone uncapped."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     fn, _ = REGISTRY["mix_waterfill_token_budget"]
 

@@ -8,6 +8,7 @@ import pytest
 
 import time_series_data_trimmer_spark.operators.dedup as dd
 import time_series_data_trimmer_spark.operators.text as tx
+from time_series_data_trimmer_spark.queries_fam import load_registry
 
 
 @pytest.fixture(scope="module")
@@ -89,8 +90,7 @@ def test_bpe_incremental_trainer_matches_full_recount(spark):
 def test_waterfill_budget_integer_div(spark):
     """Budget must be sum(avail) div 2 exactly (ADVICE r11 #3): odd
     totals truncate, never round."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     fn, _ = REGISTRY["mix_waterfill_token_budget"]
     out = fn(spark, "/root/testdata/sf0.001").collect()
@@ -110,8 +110,7 @@ def test_chapman_estimator_closed_form(spark):
         rows.append((100 + i, f"text {i}", "b"))
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
     df.write.mode("overwrite").parquet("/tmp/tsdt_chapman/documents.parquet")
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     fn, _ = REGISTRY["stats_chapman_source_overlap"]
     out = {(r["src_a"], r["src_b"]): r for r in fn(spark, "/tmp/tsdt_chapman").collect()}
@@ -122,8 +121,7 @@ def test_chapman_estimator_closed_form(spark):
 
 
 def test_group_kfold_never_straddles(spark):
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     from time_series_data_trimmer_spark.operators.sampling import hash_u32
     from time_series_data_trimmer_spark.queries import _events
     import pyspark.sql.functions as FF
@@ -147,8 +145,7 @@ def test_dp_quantile_map_is_true_median_bin(spark):
     """With epsilon-weights monotone in rank error, the MAP bin must be
     the bin whose below-count is closest to n/2 (exact integer argmax,
     bin-index tie-break)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     fn, _ = REGISTRY["privacy_dp_quantile_utility"]
     out = fn(spark, "/root/testdata/sf0.001").collect()
@@ -162,8 +159,7 @@ def test_dp_quantile_map_is_true_median_bin(spark):
 def test_removed_vs_kept_reconciles_with_exact_groups(spark):
     """kept docs per source must sum to the number of distinct content
     groups overall (each group keeps exactly one doc)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import duckdb
 
     fn, _ = REGISTRY["dedup_removed_vs_kept_profile"]

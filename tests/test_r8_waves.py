@@ -6,8 +6,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from time_series_data_trimmer_spark.operators import graph as gr
-from time_series_data_trimmer_spark.queries import REGISTRY
-import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+from time_series_data_trimmer_spark.queries_fam import load_registry
+
+REGISTRY = load_registry()
 
 SF = "/root/testdata/sf0.001"
 
@@ -137,7 +138,7 @@ def test_poisson_weights_mean_one(spark):
     """Poisson(1) CDF thresholds: the hash-derived weights must average
     ≈1 over many draws (unbiasedness of the resample size)."""
     from time_series_data_trimmer_spark.operators.sampling import hash_u32
-    from time_series_data_trimmer_spark.queries_ext import _BOOT_T
+    from time_series_data_trimmer_spark.queries_common import _BOOT_T
 
     df = spark.range(20000).select(
         hash_u32(F.col("id"), "tsdt|boot").alias("u")

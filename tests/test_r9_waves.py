@@ -9,6 +9,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from time_series_data_trimmer_spark.operators import text as tx
+from time_series_data_trimmer_spark.queries_fam import load_registry
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -217,8 +218,7 @@ def test_recall_suite_reconciles_with_standalone_curves(spark):
     numbers must be IDENTICAL row-for-row; the IVF section differs by
     design (8 probes vs 5, self excluded vs kept) and is value-checked
     by its own oracle instead."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     sf = SF_DIR
     suite = {
@@ -281,8 +281,7 @@ def test_local_clustering_closed_forms(spark):
 def test_clustering_bucket_rollup_reconciles_with_triangle_count(spark):
     """Σ per-vertex triangle credits = 3 × global triangle count on
     the same graph (each triangle credits its three corners)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     rollup = REGISTRY["graph_clustering_by_degree"][0](spark, SF_DIR)
     tri = REGISTRY["graph_triangle_count_cooc"][0](spark, SF_DIR)
@@ -295,8 +294,7 @@ def test_ece_is_bounded_by_max_gap_and_auc_population(spark):
     """ECE (weighted mean bin gap) can never exceed the max bin gap,
     and the eval family scores one population: ECE's n_docs equals
     AUC's n_pos + n_neg."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     e = REGISTRY["eval_ece_binned"][0](spark, SF_DIR).collect()[0]
     assert 0.0 <= e["ece"] <= e["max_gap"] + 1e-9 <= 1.0 + 1e-9
@@ -307,8 +305,6 @@ def test_ece_is_bounded_by_max_gap_and_auc_population(spark):
 def test_t_closeness_single_class_is_close(spark):
     """If every document belongs to ONE (lang, source) class, the
     class distribution IS the global distribution: t = 0 exactly."""
-    import time_series_data_trimmer_spark.queries_ext as qe
-
     docs = spark.createDataFrame(
         [(i, "en", "web", "some text here " * (3 + i % 5)) for i in range(40)],
         "doc_id long, lang string, source string, text string",
@@ -316,7 +312,7 @@ def test_t_closeness_single_class_is_close(spark):
     import tempfile, os
     d = tempfile.mkdtemp()
     docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    from time_series_data_trimmer_spark.queries import REGISTRY
+    REGISTRY = load_registry()
     out = REGISTRY["privacy_t_closeness_audit"][0](spark, d).collect()
     assert len(out) == 1
     assert out[0]["risk_class"] == "t<0.1 close"
@@ -334,8 +330,7 @@ def test_split_leakage_flags_planted_cross_split_neardup(spark):
     documents yields no candidate pairs at all."""
     import hashlib
 
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     def split_of(doc_id: int) -> str:
         h = int(hashlib.md5(f"tsdt|split|{doc_id}".encode()).hexdigest()[:8], 16)
@@ -451,8 +446,7 @@ def test_brier_murphy_identity_and_eval_family_population(spark):
     """The binned Murphy identity brier = REL − RES + UNC holds by
     construction; the decomposition scores the same population as
     ECE/AUC."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     b = REGISTRY["eval_brier_decomposition"][0](spark, SF_DIR).collect()[0]
     assert abs(
@@ -468,8 +462,7 @@ def test_woe_signs_and_iv_nonnegative(spark):
     """A category enriched in positives gets WOE > 0, one enriched in
     negatives WOE < 0, and every IV term is ≥ 0 (it is (ps−ns)·ln(ps/ns),
     a product of same-sign factors)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import os, tempfile
 
     good = (
@@ -542,8 +535,7 @@ def test_dedup_aware_epochs_discounts_planted_duplicates(spark):
     """A source made of 4 identical docs gets effective_tokens =
     raw/4 (each doc weighted 1/cluster_size); a source of unique docs
     keeps discount 1.0."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import os, tempfile
 
     dup = "the same boilerplate paragraph repeated across mirror sites " * 4
@@ -572,8 +564,7 @@ def test_dedup_aware_epochs_discounts_planted_duplicates(spark):
 def test_jaccard_links_bounds_and_nonadjacency(spark):
     """Jaccard scores live in (0, 1]; returned pairs are non-adjacent
     by construction and fully ordered."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     out = REGISTRY["graph_jaccard_links"][0](spark, SF_DIR).collect()
     assert len(out) > 0
@@ -585,8 +576,7 @@ def test_jaccard_links_bounds_and_nonadjacency(spark):
 def test_confusion_at_threshold_counts_and_rates_consistent(spark):
     """The confusion row's derived rates recompute exactly from its
     own counts, and the counts cover every scored document."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     r = REGISTRY["eval_confusion_at_threshold"][0](spark, SF_DIR).collect()[0]
     tp, fp, fn, tn = r["tp"], r["fp"], r["fn"], r["tn"]
@@ -606,8 +596,7 @@ def test_bh_fdr_planted_drift_discovered_null_not(spark):
     """A type whose second time-half shifts by +10 is a discovery; a
     stationary type is not; and the BH q-values dominate the raw
     p-values (the step-up's monotonicity contract)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -645,8 +634,7 @@ def test_doremi_step_weights_normalize_and_upweight_hard_domains(spark):
     """EG invariants straight from the output: weights form a
     distribution, and weight/share ratios are strictly monotone in
     excess loss (harder-than-mixture domains get upweighted)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     rows = REGISTRY["mix_doremi_step"][0](spark, SF_DIR).collect()
     assert len(rows) > 1
@@ -666,8 +654,7 @@ def test_doremi_step_weights_normalize_and_upweight_hard_domains(spark):
 def test_hampel_replaces_planted_spike_keeps_clean_points(spark):
     """A lone 100.0 spike in a flat series is flagged and replaced by
     the local median; every clean point passes through untouched."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -699,8 +686,7 @@ def test_hampel_replaces_planted_spike_keeps_clean_points(spark):
 def test_centroid_shift_identical_halves_cosine_one(spark):
     """Vectors duplicated across parity halves give centroid cosine
     exactly 1 and l2 shift 0 for every label."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import os
     import tempfile
 
@@ -726,8 +712,7 @@ def test_hits_authority_is_distribution_and_favors_hub_heavy_type(spark):
     """Authority scores form a distribution over types, and a type
     engaged only by multi-type (hub) users outranks a type with the
     same raw count from single-type users."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -789,8 +774,7 @@ def test_prf_expansion_retrieves_doc_without_original_terms(spark):
 def test_cramers_v_perfect_association_is_one_independence_near_zero(spark):
     """type_x_hod V == 1 when every type owns one hour exclusively;
     an independent uniform grid gives V == 0."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -822,8 +806,7 @@ def test_cramers_v_perfect_association_is_one_independence_near_zero(spark):
 def test_fd_audit_key_holds_multivalued_violates(spark):
     """o_orderkey->o_custkey holds (it is a key); the planted
     multi-sourced FDs report their true violation counts."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     out = {r["fd"]: r for r in REGISTRY["dq_functional_dependency"][0](spark, SF_DIR).collect()}
     assert out["orders.o_orderkey->o_custkey"]["holds"] == 1
@@ -839,8 +822,7 @@ def test_chi2_zero_cells_contribute_expected_mass(spark):
     contributes (0−E)²/E — perfect 2×2 association yields chi2 = n
     and the residual drill-down emits the missing cells with negative
     residuals."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -872,8 +854,7 @@ def test_lift_gains_monotone_and_reconciles_with_confusion(spark):
     walking DOWN the score bands, the bottom row captures everything
     (gains=1, lift=1 at 100% share), and totals reconcile with the
     confusion matrix's positive count."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     rows = sorted(
         REGISTRY["eval_lift_gains_decile"][0](spark, SF_DIR).collect(),
@@ -914,8 +895,7 @@ def test_dp_report_sensitivity_and_publishability(spark):
     """User-level sensitivity is the max per-user contribution, the
     looser epsilon is never MORE publishable, and rel_err recomputes
     from its own columns."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     rows = REGISTRY["privacy_dp_count_report"][0](spark, SF_DIR).collect()
     assert rows
@@ -991,8 +971,7 @@ def test_stream_cusum_state_carries_across_triggers(spark):
 def test_hashing_collision_monotone_in_width(spark):
     """More hash bits never increase collisions; bucket counts bound
     by both vocab size and table size."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     rows = {r["k_bits"]: r for r in REGISTRY["feature_hashing_collision_report"][0](spark, SF_DIR).collect()}
     assert set(rows) == {12, 16, 20}
@@ -1006,8 +985,7 @@ def test_hashing_collision_monotone_in_width(spark):
 
 def test_volume_anomaly_flags_planted_burst_day(spark):
     """29 calm days + one 12x day: exactly the burst day flags."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -1041,8 +1019,7 @@ def test_kcenter_picks_are_diverse_and_radius_shrinks(spark):
     """Farthest-point invariants: 8 distinct picks, the covering
     radius (dist2 at selection) is non-increasing, and on a planted
     3-cluster set the first 3 picks hit 3 different clusters."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import os
     import tempfile
 
@@ -1075,8 +1052,7 @@ def test_basket_lift_planted_perfect_pair_tops(spark):
     """Parts 1 and 2 always co-occur in their 4 baskets and nowhere
     else -> they top the lift ranking; a pair seen twice (< min
     support 3) is excluded."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import os
     import tempfile
 
@@ -1112,8 +1088,7 @@ def test_markov_stationary_absorbing_type_takes_mass(spark):
     """A chain where every user drifts a->b->c and stays on c: the
     stationary estimate puts the most mass on c and both columns form
     distributions."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -1146,8 +1121,7 @@ def test_lp_modularity_two_cliques_high_q(spark):
     """Two 5-cliques joined by one bridge: LP recovers the two
     communities and Q lands near the two-community optimum (~0.4);
     the planted structure also pins n_communities and intra fraction."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -1185,8 +1159,7 @@ def test_lp_modularity_two_cliques_high_q(spark):
 def test_holt_backtest_columns_reconcile(spark):
     """MASE ratio recomputes from its own MAEs and the win rate is a
     proper fraction; the eval count is bounded by the corpus."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     r = REGISTRY["ts_holt_backtest_mase"][0](spark, SF_DIR).collect()[0]
     assert r["n_evals"] > 0
@@ -1198,8 +1171,7 @@ def test_holt_backtest_columns_reconcile(spark):
 def test_srm_clean_hash_passes_broken_assignment_flags(spark):
     """The md5 assignment over sequential user ids shows no SRM; a
     deliberately broken assignment (every user to bucket 0) flags."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -1221,8 +1193,7 @@ def test_interleave_schedule_prefix_stays_on_mix(spark):
     source's realized slot count within 2 slots of its target share
     (virtual-time EDF bound at arbitrary prefixes) — the property IID
     sampling lacks (O(sqrt n) wander); steps are 1..N with no gaps."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import os
     import tempfile
 
@@ -1253,8 +1224,7 @@ def test_interleave_schedule_prefix_stays_on_mix(spark):
 def test_family_agreement_counts_reconcile(spark):
     """n_union = n_minhash + n_simhash − n_both, and both similarity
     ratios live in [0,1]."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     r = REGISTRY["dedup_family_agreement"][0](spark, SF_DIR).collect()[0]
     assert r["n_union"] == r["n_minhash"] + r["n_simhash"] - r["n_both"]
@@ -1266,8 +1236,7 @@ def test_family_agreement_counts_reconcile(spark):
 def test_qi_risk_monotone_in_dimensions(spark):
     """Adding QI attributes can only shrink equivalence classes:
     group count rises, min_k falls, risk share rises (weakly)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     out = {r["qi_set"]: r for r in REGISTRY["privacy_qi_risk_sweep"][0](spark, SF_DIR).collect()}
     a, b, c = out["type"], out["type+hour"], out["type+hour+dow"]
@@ -1280,8 +1249,7 @@ def test_qi_risk_monotone_in_dimensions(spark):
 def test_tost_identical_halves_equivalent_shifted_not(spark):
     """A stationary type affirms equivalence; a type whose second
     half shifts by 5x the margin does not."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
     import datetime
     import os
     import tempfile
@@ -1310,8 +1278,7 @@ def test_tost_identical_halves_equivalent_shifted_not(spark):
 def test_f1_sweep_best_flag_is_argmax_and_counts_reconcile(spark):
     """Exactly one best row; it attains the max F1; every row's
     tp+fn equals the positive total."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     rows = REGISTRY["eval_f1_threshold_sweep"][0](spark, SF_DIR).collect()
     assert rows
@@ -1326,8 +1293,7 @@ def test_f1_sweep_best_flag_is_argmax_and_counts_reconcile(spark):
 def test_kmv_error_curve_tightens_and_saturates(spark):
     """Mean |rel err| is non-increasing in k, and once k exceeds a
     source's true vocabulary the sketch is exact (n_kept < k branch)."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     rows = REGISTRY["sketch_kmv_error_vs_k"][0](spark, SF_DIR).collect()
     by_k = {}
@@ -1345,8 +1311,7 @@ def test_kmv_error_curve_tightens_and_saturates(spark):
 def test_vocab_coverage_walk_reaches_one(spark):
     """Walking bands from the top, coverage is monotone and the last
     row covers the whole corpus mass and vocabulary."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     rows = sorted(
         REGISTRY["text_vocab_coverage_by_freq_band"][0](spark, SF_DIR).collect(),

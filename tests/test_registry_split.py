@@ -1,7 +1,9 @@
-"""The per-family registry split (VERDICT r9 #5) must be invisible to
-the driver contract: identical ordered name list, identical oracle
-coverage, every family module contributing, no module back above the
-~5k-line ceiling the split exists to enforce."""
+"""The query registry is ``queries.py`` plus every ``queries_fam``
+module, loaded by ``queries_fam.load_registry()``. The contract of
+``__spark_entry__`` must stay stable across that layout: a pinned
+registration order, ``_FIRST_50`` at the head of ``queries()``, an exact
+oracle per query, every family module contributing, and no module above
+the ~5k-line ceiling."""
 
 import glob
 import json
@@ -17,27 +19,17 @@ def _entry():
 
 
 def test_ordered_names_frozen():
-    """REGISTRY registration order matches the frozen fixture. Any
-    reorder — a family module shuffle, a new import order, a lost
-    reorder step — fails here. Checked on the RAW registry, not
-    queries(): the `_FIRST_50` rotation reorders the queries() head
-    intentionally every round (VERDICT rotation item), while the
-    underlying registration order is the thing the module split could
-    silently break. New registrations may land anywhere; the frozen
-    names must keep their exact relative order.
+    """REGISTRY registration order matches the pinned fixture, and
+    ``queries()`` opens with ``_FIRST_50``. Registration order is the
+    import order: the core module, then the ``queries_fam`` modules in
+    sorted name order. A family module renamed, dropped or importing
+    another family's module mid-file fails here. New registrations may
+    land anywhere; the pinned names must keep their relative order.
 
-    Provenance (ADVICE r11 #4): the r11 fixture was regenerated in
-    the same change that re-targeted this assertion from queries() to
-    REGISTRY, so it could not itself detect drift inside that window.
-    Closed r12 by re-deriving the pre-split order from a worktree at
-    ``e85d610^`` (the commit before the family split): importing that
-    tree's REGISTRY gives 352 names whose order the 358-name r11
-    fixture — and the current registry — preserve exactly (verified
-    by subsequence equality). The fixture now pins the FULL registry
-    (all 372 r11-final names, previously 14 r11 additions unpinned);
-    regenerate by appending new names only, never by re-dumping over
-    a reorder."""
-    _entry()
+    The fixture was regenerated once from that import order when the
+    per-family registry replaced the replay of the pre-split monolith's
+    order; regenerate by appending new names only."""
+    entry = _entry()
     from time_series_data_trimmer_spark.queries import REGISTRY
 
     with open(os.path.join(REPO, "tests", "fixtures_registry_order.json")) as f:
@@ -46,10 +38,11 @@ def test_ordered_names_frozen():
     fset = set(frozen)
     kept = [n for n in got if n in fset]
     assert kept == frozen, (
-        "registration order drifted from the split-day freeze; first "
+        "registration order drifted from the pinned fixture; first "
         f"divergence at {next(i for i, (a, b) in enumerate(zip(kept, frozen)) if a != b)}"
     )
     assert fset <= set(got), f"frozen names missing: {fset - set(got)}"
+    assert list(entry.queries())[:50] == entry._FIRST_50
 
 
 def test_every_query_has_exact_oracle():
@@ -61,9 +54,9 @@ def test_every_query_has_exact_oracle():
 
 
 def test_family_modules_all_register():
-    """Each queries_fam/*.py module contributes at least one REGISTRY
-    entry (guards against a family import silently dropped from
-    queries_ext)."""
+    """Every queries_fam/*.py module contributes at least one REGISTRY
+    entry defined in it (guards against a family module that
+    ``load_registry`` does not import)."""
     _entry()
     from time_series_data_trimmer_spark.queries import REGISTRY
 
@@ -75,18 +68,13 @@ def test_family_modules_all_register():
         for p in glob.glob(os.path.join(fam_dir, "*.py"))
         if not p.endswith("__init__.py")
     ]
-    assert len(mods) >= 14
-    import importlib
-
+    assert len(mods) >= 17
+    owners = {fn.__module__ for fn, _sql in REGISTRY.values()}
     for m in mods:
-        mod = importlib.import_module(
-            f"time_series_data_trimmer_spark.queries_fam.{m}"
+        assert f"time_series_data_trimmer_spark.queries_fam.{m}" in owners, (
+            f"family module {m} registers no query"
         )
-        regs = [
-            n for n in dir(mod) if n.startswith("_q_")
-        ]
-        assert regs, f"family module {m} defines no query functions"
-    assert len(REGISTRY) >= 352
+    assert len(REGISTRY) >= 396
 
 
 def test_no_module_above_size_ceiling():

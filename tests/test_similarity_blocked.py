@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.operators import similarity as sim
+from time_series_data_trimmer_spark.queries_fam import load_registry
 
 DIM = 32
 N_BASE = 60
@@ -214,8 +215,7 @@ def test_hard_negatives_match_allpairs_on_small_corpus(spark):
     hard-negative miner must agree with the exact all-pairs
     different-label top-k on the tiny corpus; and every emitted
     negative must carry a label different from its anchor's."""
-    from time_series_data_trimmer_spark.queries import REGISTRY
-    import time_series_data_trimmer_spark.queries_ext  # noqa: F401
+    REGISTRY = load_registry()
 
     got = REGISTRY["emb_hard_negatives"][0](spark, "/root/testdata/sf0.001").collect()
     assert got, "miner returned nothing"

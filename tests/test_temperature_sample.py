@@ -16,8 +16,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from time_series_data_trimmer_spark.operators import sampling as sp
-from time_series_data_trimmer_spark.queries import REGISTRY
-import time_series_data_trimmer_spark.queries_ext  # noqa: F401  (fills REGISTRY)
+from time_series_data_trimmer_spark.queries_fam import load_registry
+
+REGISTRY = load_registry()
 
 SF_DIR = "/root/testdata/sf0.001"
 

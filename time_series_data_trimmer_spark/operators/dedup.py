@@ -645,39 +645,14 @@ def prefix_join_candidates(
         return F.ceil(x - F.lit(1e-9))
 
     dfc = toks.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    # r14 gram dictionary (VERDICT r13 #2, guide §2.3 "shuffle keys and
-    # metadata instead of payloads"): every exchange below here used to
-    # key on / carry the GRAM STRING (a 3-word shingle, ~15-40 bytes,
-    # string hash + string compare per probe). Mint a collision-free
-    # dense LONG id per distinct gram on the already-aggregated df
-    # table and drop the string immediately after the one unavoidable
-    # string-keyed join (attaching df+gid to token rows): the doc
-    # window, the prefix self-join, and both verify joins then shuffle
-    # and compare 8-byte longs. Collision-free by construction —
-    # monotonically_increasing_id is unique per row of one
-    # materialization, and the localCheckpoint pins a SINGLE
-    # materialized assignment for all six downstream consumers (the
-    # ids are arbitrary but consistent, which is all the canonical
-    # order and the verify equality need; the final pair set is
-    # id-assignment-invariant because verify recomputes exact Jaccard).
-    # NOTE (checkpoint policy): the dictionary is O(distinct grams) —
-    # corpus-scale at 100 TB but 3 narrow columns; the checkpoint is
-    # REQUIRED for id consistency across consumers, not just reuse. On
-    # a real cluster this frame is the one PPJoin site that should use
-    # a reliable checkpoint dir instead of executor-local blocks.
-    gdict = dfc.withColumn(
-        "gid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=False)
-    ranked = toks.join(gdict.hint("shuffle_hash"), "g").drop("g")
+    ranked = toks.join(dfc.hint("shuffle_hash"), "g")
     from pyspark.sql import Window
 
-    wdoc = Window.partitionBy(id_col).orderBy(
-        F.col("df").asc(), F.col("gid").asc()
-    )
+    wdoc = Window.partitionBy(id_col).orderBy(F.col("df").asc(), F.col("g").asc())
     wsz = Window.partitionBy(id_col)
     ranked = ranked.select(
         F.col(id_col),
-        "gid",
+        "g",
         F.row_number().over(wdoc).alias("rn"),
         F.count(F.lit(1)).over(wsz).alias("sz"),
     )
@@ -694,7 +669,7 @@ def prefix_join_candidates(
     sza, szb = F.col("pa.sz"), F.col("pb.sz")
     # PPJoin overlap threshold α = ⌈τ/(1+τ)·(|A|+|B|)⌉
     alpha = _safe_ceil(F.lit(tau / (1.0 + tau)) * (sza + szb))
-    cond = (F.col("pa.gid") == F.col("pb.gid")) & (
+    cond = (F.col("pa.g") == F.col("pb.g")) & (
         F.col(f"pa.{id_col}") < F.col(f"pb.{id_col}")
     )
     if use_length_filter:
@@ -709,12 +684,7 @@ def prefix_join_candidates(
             >= alpha
         )
     cand = (
-        # explicit SHJ hint (r14): the pre-dictionary form inherited
-        # shuffle_hash from the df-attach join's hinted side; the
-        # checkpointed dictionary breaks that propagation and the
-        # planner would fall back to SortMergeJoin (the plan-shape
-        # sweep forbids SMJ here — no sort is needed to probe prefixes)
-        pa.join(pb.hint("shuffle_hash"), cond)
+        pa.join(pb, cond)
         .select(
             F.col(f"pa.{id_col}").alias("id_a"),
             F.col(f"pb.{id_col}").alias("id_b"),
@@ -786,16 +756,13 @@ def ngram_jaccard_prefix_pairs(
     )
     cand, ranked = prefix_join_candidates(toks, min_jaccard, id_col)
     sz = ranked.filter(F.col("rn") == 1).select(F.col(id_col), F.col("sz"))
-    # r14: verify joins carry/compare the dictionary LONG id, never the
-    # gram string (see prefix_join_candidates) — same exact overlap
-    # count, a fraction of the shuffle bytes and key-compare cost.
-    ta = ranked.select(F.col(id_col).alias("id_a"), F.col("gid"))
-    tb = ranked.select(F.col(id_col).alias("__idb"), F.col("gid").alias("gidb"))
+    ta = ranked.select(F.col(id_col).alias("id_a"), F.col("g"))
+    tb = ranked.select(F.col(id_col).alias("__idb"), F.col("g").alias("gb"))
     inter = (
         cand.join(ta.hint("shuffle_hash"), "id_a")
         .join(
             tb.hint("shuffle_hash"),
-            (F.col("id_b") == F.col("__idb")) & (F.col("gid") == F.col("gidb")),
+            (F.col("id_b") == F.col("__idb")) & (F.col("g") == F.col("gb")),
         )
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("i"))

@@ -51,6 +51,7 @@ except Exception:  # pragma: no cover
 
 DEFAULT_SAMPLE_RATE = 120.0
 _SEL_COL = "__in_selection"
+_IDX_COL = "__row_idx"
 
 #: parameter schema per filter, mirroring FILTER_PARAM_MAP
 #: (/root/reference/dialogs.py:15-30).
@@ -103,8 +104,10 @@ def _windows(
     trial_key: str | Sequence[str] | None,
     order_cols: Sequence[str],
     selection: bool,
-) -> tuple[WindowSpec, WindowSpec]:
-    """(ordered window, unbounded partition window) for the trial grain."""
+) -> tuple[WindowSpec, WindowSpec, WindowSpec]:
+    """(ordered window, unbounded partition window, reverse-ordered
+    window) for the trial grain. The reverse order mirrors the ordered
+    one exactly only where ``order_cols`` are unique in a partition."""
     pcols: list[str] = []
     if trial_key:
         pcols = [trial_key] if isinstance(trial_key, str) else list(trial_key)
@@ -112,7 +115,8 @@ def _windows(
         pcols = pcols + [_SEL_COL]
     ws = Window.partitionBy(*pcols).orderBy(*order_cols)
     wp = Window.partitionBy(*pcols)
-    return ws, wp
+    wr = Window.partitionBy(*pcols).orderBy(*[F.col(c).desc() for c in order_cols])
+    return ws, wp, wr
 
 
 # ---------------------------------------------------------------------------
@@ -202,17 +206,22 @@ def _f_detrend(c: Column, ws: WindowSpec, wp: WindowSpec, p: Mapping, fs: float)
     )
 
 
-def _f_interpolate_linear(c: Column, ws: WindowSpec, wp: WindowSpec, p: Mapping, fs: float) -> Column:
+def _f_interpolate_linear(c: Column, ws: WindowSpec, wr: WindowSpec) -> Column:
     # pandas Series.interpolate(method="linear", limit_direction="both"):
     # values treated as equally spaced (index ignored); leading/trailing NaNs
     # filled from the nearest valid value (filter_engine.py:85-87).
-    idx = F.row_number().over(ws).cast("double")
+    # ws / wr order by the row index column (_IDX_COL) up and down. The
+    # nearest valid value AFTER a row is the last one up to it in reverse
+    # order: both frames grow from the partition start, so Spark keeps a
+    # running aggregate, O(n) per trial. (A currentRow ->
+    # unboundedFollowing frame is re-evaluated per row, O(n²).)
+    idx = F.col(_IDX_COL).cast("double")
     back = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    fwd = ws.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    ahead = wr.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     prev_v = F.last(c, ignorenulls=True).over(back)
-    next_v = F.first(c, ignorenulls=True).over(fwd)
+    next_v = F.last(c, ignorenulls=True).over(ahead)
     prev_i = F.last(F.when(c.isNotNull(), idx), ignorenulls=True).over(back)
-    next_i = F.first(F.when(c.isNotNull(), idx), ignorenulls=True).over(fwd)
+    next_i = F.last(F.when(c.isNotNull(), idx), ignorenulls=True).over(ahead)
     lerp = prev_v + (next_v - prev_v) * (idx - prev_i) / (next_i - prev_i)
     return (
         F.when(c.isNotNull(), c)
@@ -405,7 +414,7 @@ def apply_filter(
         df = df.withColumn(
             _SEL_COL, F.col(time_col).cast("double").between(float(start), float(end))
         )
-    ws, wp = _windows(trial_key, order_cols, has_sel)
+    ws, wp, wr = _windows(trial_key, order_cols, has_sel)
 
     if filter_type in _EXPR_FILTERS or filter_type == "interpolate":
         method = str(params.get("method", "linear"))
@@ -414,16 +423,27 @@ def apply_filter(
                 df, channels, method, trial_key=trial_key, time_col=time_col, has_sel=has_sel
             )
         else:
-            builder = (
-                _f_interpolate_linear if filter_type == "interpolate" else _EXPR_FILTERS[filter_type]
-            )
+            interp = filter_type == "interpolate"
+            if interp:
+                # number the rows once and order every frame by that unique
+                # index, so the forward and reverse orders mirror each other
+                # even where order_cols tie
+                df = df.withColumn(_IDX_COL, F.row_number().over(ws))
+                ws, _, wr = _windows(trial_key, [_IDX_COL], has_sel)
             exprs = {}
             for ch in channels:
-                newc = builder(F.col(ch).cast("double"), ws, wp, params, sample_rate)
+                c = F.col(ch).cast("double")
+                newc = (
+                    _f_interpolate_linear(c, ws, wr)
+                    if interp
+                    else _EXPR_FILTERS[filter_type](c, ws, wp, params, sample_rate)
+                )
                 if has_sel:
                     newc = F.when(F.col(_SEL_COL), newc).otherwise(F.col(ch))
                 exprs[ch] = newc
             df = df.withColumns(exprs)
+            if interp:
+                df = df.drop(_IDX_COL)
     elif filter_type in _KERNEL_FILTERS:
         df = _apply_pandas_kernel(
             df, channels, _kernel_fn(filter_type, params, sample_rate),

@@ -11,10 +11,54 @@ like any other fact table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.functions.rounding import rd
+
+
+def neighbor_pairs(
+    edges: DataFrame,
+    u: str,
+    v: str,
+    a: str = "a",
+    b: str = "b",
+    cap: int | None = None,
+    cap_order: Sequence[Column] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Every pair of one vertex's neighbors, without a self-join:
+    ``(lists, pairs)``.
+
+    ``lists`` is ``(u, __nbrs)``: the sorted ``v`` list of each ``u``,
+    built behind ONE user-pinned exchange on ``u`` (a repartition count
+    is exempt from AQE coalescing, so the quadratic pair fan-out runs
+    at defaultParallelism instead of the 1-3 tasks AQE coalesces a
+    tiny-byte join reduce to). ``pairs`` is ``(u, a, b)``: each list's
+    C(n, 2) pairs, ``a < b``, exploded in-row. With ``cap``, a list
+    keeps only the first ``cap`` neighbors of ``u`` by ``cap_order``.
+    Callers bound n: degree orientation (O(√m) fan) or the cap."""
+    par = edges.sparkSession.sparkContext.defaultParallelism
+    src = edges.repartition(par, u)
+    if cap is not None:
+        rn = F.row_number().over(Window.partitionBy(u).orderBy(*cap_order))
+        src = src.withColumn("__rn", rn).filter(F.col("__rn") <= cap)
+    lists = src.groupBy(u).agg(F.sort_array(F.collect_list(v)).alias("__nbrs"))
+    nb = F.col("__nbrs")
+    pair_structs = F.flatten(
+        F.transform(
+            nb,
+            lambda x, i: F.transform(
+                F.slice(nb, i + F.lit(2), F.size(nb)),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )
+    pairs = lists.select(u, F.explode(pair_structs).alias("__p")).select(
+        u, F.col(f"__p.{a}").alias(a), F.col(f"__p.{b}").alias(b)
+    )
+    return lists, pairs
 
 
 def pagerank(
@@ -157,33 +201,9 @@ def triangle_count(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
     )
-    # r14 wedge build (guide §2.3/§2.4/§2.5, the local_clustering
-    # rewrite): the o⨝o self-join on u (two exchanges + an
-    # AQE-coalesced CPU-dense reduce) becomes ONE user-pinned exchange
-    # on u + a sorted per-apex neighbor list + a bounded in-row pair
-    # explode (fan ≤ O(√m) by orientation). out-degree is the list
-    # SIZE — the separate out_deg aggregation folds into the same
-    # pass. nb is O(V) rows / O(m) cells, checkpointed for its two
-    # consumers (max-odeg scalar + the wedge explode).
-    par = edges.sparkSession.sparkContext.defaultParallelism
-    nb = (
-        oriented.repartition(par, "u")
-        .groupBy("u")
-        .agg(F.sort_array(F.collect_list("w")).alias("__ws"))
-        .localCheckpoint(eager=False)
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__ws"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ws"), i + F.lit(2), F.size(F.col("__ws"))),
-                lambda y: F.struct(x.alias("v1"), y.alias("v2")),
-            ),
-        )
-    )
-    wedges = nb.select(F.explode(pair_structs).alias("__p")).select(
-        F.col("__p.v1").alias("a"), F.col("__p.v2").alias("b")
-    )
+    # wedges: per-apex neighbor-list pair explode (`neighbor_pairs`);
+    # out-degree is the list size, so max_out_degree reads the same lists
+    nb, wedges = neighbor_pairs(oriented, "u", "w")
     # r13: count wedges and closed wedges in ONE pass over the wedge
     # self-join (left membership join + conditional sum) — the lazy
     # form ran the wedge join twice (once for n_wedges, once for
@@ -213,7 +233,7 @@ def triangle_count(
         .crossJoin(
             F.broadcast(
                 nb.agg(
-                    F.max(F.size("__ws"))
+                    F.max(F.size("__nbrs"))
                     .cast("long")
                     .alias("max_out_degree")
                 )
@@ -492,19 +512,7 @@ def local_clustering(
     lo_first = (F.col("__da") < F.col("__db")) | (
         (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
     )
-    # r14 wedge build (guide §2.3/§2.4/§2.5): the old shape was an
-    # o⨝o self-join on u — TWO exchanges of the oriented edges plus a
-    # join whose reduce stage AQE coalesced to ~3 tasks at sf0.1 (tiny
-    # bytes, O(Σ deg_lo²) fan-out CPU — the operator's hottest stage
-    # ran on 3 of 32 cores). Degree-orientation bounds each vertex's
-    # low-neighbor fan at O(√m), so the wedge set is exactly the
-    # sorted per-u neighbor list's C(fan, 2) ordered pairs: ONE
-    # user-pinned exchange on u (repartition counts are exempt from
-    # AQE coalescing → the expansion runs at defaultParallelism, which
-    # is submit-conf on a real cluster), one partial+final collect per
-    # u, and a bounded in-row pair explode — no self-join, no
-    # checkpoint (single consumer), one shuffle of o instead of two.
-    par = edges.sparkSession.sparkContext.defaultParallelism
+    # wedges: per-apex neighbor-list pair explode (`neighbor_pairs`)
     o = (
         canon.join(da.hint("shuffle_hash"), "a")
         .join(db.hint("shuffle_hash"), "b")
@@ -513,23 +521,7 @@ def local_clustering(
             F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("w"),
         )
     )
-    nb = (
-        o.repartition(par, "u")
-        .groupBy("u")
-        .agg(F.sort_array(F.collect_list("w")).alias("__ws"))
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__ws"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ws"), i + F.lit(2), F.size(F.col("__ws"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    wedges = nb.select("u", F.explode(pair_structs).alias("__p")).select(
-        "u", F.col("__p.a").alias("a"), F.col("__p.b").alias("b")
-    )
+    _, wedges = neighbor_pairs(o, "u", "w")
     tri = wedges.join(canon.hint("shuffle_hash"), ["a", "b"]).select(
         "u", "a", "b"
     )

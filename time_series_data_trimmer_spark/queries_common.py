@@ -1,11 +1,7 @@
-"""Shared helpers for the per-family extension query modules
-(split out of the former monolithic queries_ext.py): imports,
-SQL fragment constants, and cross-family helper functions, in
-their original definition order. ``__all__`` lists every name
-(including underscore-prefixed ones) so the family modules can
-star-import the full namespace the monolith's blocks saw.
-
-Original monolith docstring:
+"""Shared helpers for the per-family query modules in ``queries_fam``:
+imports, SQL fragment constants and cross-family helper functions.
+``__all__`` holds every name, underscore-prefixed ones included, so the
+family modules can star-import the whole namespace.
 
 Extension query registry: TPC-H-style relational queries, corpus
 dedup / similarity / text-analysis operators, and a Structured
@@ -2134,231 +2130,6 @@ def _holt_backtest_sql() -> str:
 _ILV_N = 120
 
 
-__all__ = [
-    "DataFrame",
-    "F",
-    "R",
-    "REGISTRY",
-    "SparkSession",
-    "Window",
-    "_AA_CAP",
-    "_AB_MDE_ABS",
-    "_ASOF_TOL_S",
-    "_BITS_SWEEP",
-    "_BM25_B",
-    "_BM25_K",
-    "_BM25_K1",
-    "_BM25_TERMS",
-    "_BOOT_B",
-    "_BOOT_SEED",
-    "_BOOT_T",
-    "_BPE_PAIR_TOKS",
-    "_BPE_ROUNDS",
-    "_C4_CUM",
-    "_C4_FEATS_SQL",
-    "_C4_RULES_SQL",
-    "_CCNET_LM_SQL",
-    "_CENT_C",
-    "_CENT_D",
-    "_CHUNK_OV",
-    "_CHUNK_RET_K",
-    "_CHUNK_RET_TERMS",
-    "_CHUNK_T",
-    "_CMJS_D",
-    "_CMJS_SEED",
-    "_CMJS_W",
-    "_CM_CELL_UNION",
-    "_CM_D",
-    "_CM_ITEMS",
-    "_CM_SEED",
-    "_CM_W",
-    "_CONF_ALPHA_DEN",
-    "_CONF_ALPHA_NUM",
-    "_COOC_MIN_DF",
-    "_COOC_MIN_XY",
-    "_CURR_P",
-    "_CURR_SEED",
-    "_DECONTAM_SQL",
-    "_DOT_TERMS",
-    "_DSIR_B",
-    "_DSIR_H",
-    "_DTW_B",
-    "_DTW_INF",
-    "_DTW_L",
-    "_DTW_W",
-    "_EMB_BITS",
-    "_EMB_CLUSTER_TAU",
-    "_EMB_DIM",
-    "_EMB_TABLES",
-    "_ENC_COLS",
-    "_EVAL_TAUS",
-    "_EVAL_TRUTH_TAIL_SQL",
-    "_EXPORT_SHARDS",
-    "_EX_SQL",
-    "_FUNNEL4_STEPS",
-    "_FUNNEL4_WINDOWS",
-    "_FUNNEL_STAGES",
-    "_GOPHER_STOP_SQL",
-    "_HLS_VS_C4_SQL",
-    "_HN_K",
-    "_HOLT_D",
-    "_ILV_N",
-    "_KANON_BAND",
-    "_KCORE_EXACT_CAP",
-    "_KCORE_KS",
-    "_KCORE_ROUNDS",
-    "_KMV_DAY_US",
-    "_KMV_HOUR_US",
-    "_KMV_TOKENS_TABLE",
-    "_KNN_MAX_BITS",
-    "_LANG_BEST",
-    "_LANG_CASE",
-    "_LINKAGE_SCORED_SQL",
-    "_LP_ITERS",
-    "_LSH_GEOMETRIES",
-    "_LSH_Q_BITS",
-    "_LSH_RANKED_SQL",
-    "_LTTB_BUCKET_US",
-    "_M4_BUCKET_US",
-    "_MAT_K",
-    "_MAT_PREFIX",
-    "_MAT_SHORT",
-    "_MIX_BUDGET",
-    "_MMR_K",
-    "_MMR_LAM",
-    "_MMR_SHORT",
-    "_MMR_SQL",
-    "_MM_FEATS",
-    "_MOTIF_WORD",
-    "_MRL_DIMS",
-    "_MRL_SHORTLIST",
-    "_NDCG_IDCG",
-    "_NDCG_K",
-    "_NDCG_WS",
-    "_NPROBE_SWEEP",
-    "_PACK_LENS",
-    "_PPS_K",
-    "_PPS_S",
-    "_PPS_SEED",
-    "_PREFIX_TAU",
-    "_PROF_SEED",
-    "_PROTO_K",
-    "_PROTO_PRUNE_PCT",
-    "_PR_BASE",
-    "_PR_D",
-    "_PSI_DECILES",
-    "_QERR_K",
-    "_QERR_QS",
-    "_QSK_K",
-    "_QSK_QS",
-    "_QSK_SEED",
-    "_QSK_U",
-    "_QTX_K",
-    "_QTX_QS",
-    "_QTX_SEED",
-    "_RAKE_STOP_SQL",
-    "_RECALL_Q",
-    "_REP_WS",
-    "_RRF_QUERIES",
-    "_SAMPLE_RATE",
-    "_SAX_B",
-    "_SAX_W",
-    "_SD_HOUR_US",
-    "_SEMDEDUP_CTE_SQL",
-    "_SEMDEDUP_K",
-    "_SEMDEDUP_SWEEP_TAUS",
-    "_SEMDEDUP_TAU",
-    "_SEQ_GAP_US",
-    "_SEQ_TOPK",
-    "_SH_SQL",
-    "_SIG_SQL",
-    "_SIMHASH_BITS_SQL",
-    "_SIMHASH_COMBOS",
-    "_SIMHASH_COMBO_COLS",
-    "_SIMHASH_COMBO_VALUES",
-    "_SIMHASH_FP_SQL",
-    "_SIMHASH_KEY_SQL",
-    "_SIMHASH_M",
-    "_SIMHASH_W",
-    "_SLIDE_K",
-    "_SLIDE_W",
-    "_SPAN_ISLANDS_SQL",
-    "_SPAN_K",
-    "_SPEARMAN_RHO_SQL",
-    "_SPECTRAL_PERIODS_US",
-    "_SQL_H",
-    "_SQL_NTOK",
-    "_STRATA_CASE",
-    "_STRATA_DEFAULT",
-    "_STRATA_RATES",
-    "_SUITE_RECALL_SQL",
-    "_TOPIC_K",
-    "_TRI_BLK_US",
-    "_TRI_CAP",
-    "_TWAP_HOUR_US",
-    "_W1_SPLIT_US",
-    "_W7D_US",
-    "_XCORR_BUCKET_US",
-    "_XCORR_MAX_LAG",
-    "_Z2_80_05",
-    "_ZIPF_TOP",
-    "_boot_w_sql",
-    "_bpe_cte",
-    "_bpe_oracle_sql",
-    "_bpe_suite_unpivot_sql",
-    "_candidate_eval_frame",
-    "_cent_iter_sql",
-    "_cm_coord_sql",
-    "_cmjs_cells_sql",
-    "_dsum",
-    "_enc_sql_one",
-    "_events",
-    "_events_us",
-    "_ewma_oracle",
-    "_funnel_oracle_sql",
-    "_holt_backtest_sql",
-    "_holt_sql",
-    "_jl_oracle_sql",
-    "_kc_sql",
-    "_kcore_oracle_sql",
-    "_knn_bits",
-    "_lang_score_sql",
-    "_markov_stat_sql",
-    "_mmr_step_sql",
-    "_mrl_dim_cols_sql",
-    "_nprobe_branch_sql",
-    "_occ_sql",
-    "_pack_efficiency_agg",
-    "_pca_oracle_sql",
-    "_rrf_bm25_cte",
-    "_rrf_dense_cte",
-    "_semdedup_k",
-    "_span_grams_sql",
-    "_sql_band_pairs",
-    "_sql_dsum",
-    "_sql_var",
-    "_suite_ivf_branch_sql",
-    "_suite_lsh_branch_sql",
-    "_suite_mrl_branch_sql",
-    "_suite_unpivot_sql",
-    "_sv_cum_hist",
-    "_spread_scan",
-    "_table",
-    "ag",
-    "annotations",
-    "dd",
-    "edits",
-    "event_micros",
-    "gr",
-    "iv",
-    "ly",
-    "os",
-    "rd",
-    "register",
-    "sim",
-    "sk",
-    "sp",
-    "sql_rd",
-    "ts",
-    "tx",
-]
+# every non-dunder global, underscore names included: the family modules
+# star-import this module and use its private helpers
+__all__ = [n for n in globals() if not n.startswith("__")]

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.functions.rounding import rd, sql_rd
-from time_series_data_trimmer_spark.operators.filters import apply_filter
+from time_series_data_trimmer_spark.operators.filters import _scipy_signal, apply_filter
 from time_series_data_trimmer_spark.plans.recipe import apply_recipe, derived_channel
 from time_series_data_trimmer_spark.queries import _EVK, _T0, _W, _events, register
 
@@ -112,8 +112,8 @@ _F5_LO, _F5_HIF = -(_F5_WIN // 2), _F5_WIN - _F5_WIN // 2 - 1
 
 # like f3/f4: the oracle models the scipy-ABSENT fallback branch; under
 # scipy the kernel runs filtfilt and the query downgrades to rows-only
-# (see queries_parity.HAS_SCIPY)
-from time_series_data_trimmer_spark.queries_parity import HAS_SCIPY  # noqa: E402
+# (see parity.HAS_SCIPY)
+HAS_SCIPY = _scipy_signal is not None
 
 _F5_SQL = f"""
     WITH base AS (

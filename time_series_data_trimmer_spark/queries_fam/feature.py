@@ -1,8 +1,4 @@
-"""Feature-family extension queries (7 registrations), split out of the former
-monolithic queries_ext.py with block text unchanged. Global
-registration order is restored by queries_ext's reorder —
-do not rely on this module's import order.
-"""
+"""Feature-family extension queries."""
 
 from __future__ import annotations
 

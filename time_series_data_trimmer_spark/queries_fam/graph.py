@@ -1,8 +1,4 @@
-"""Graph-family extension queries (16 registrations), split out of the former
-monolithic queries_ext.py with block text unchanged. Global
-registration order is restored by queries_ext's reorder —
-do not rely on this module's import order.
-"""
+"""Graph-family extension queries."""
 
 from __future__ import annotations
 
@@ -676,37 +672,14 @@ def _q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         ed.select(F.col("ub").alias("u"), F.col("ua").alias("v"))
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    wn = Window.partitionBy("u").orderBy(
-        sp.hash_u32(F.col("v"), "tsdt|aa").asc(), F.col("v").asc()
+    # two-hop pairs: capped neighbor-list pair explode (`gr.neighbor_pairs`)
+    # instead of an nbr⨝nbr self-join; the cap keeps each node's first
+    # _AA_CAP neighbors in hash order
+    _, hop2 = gr.neighbor_pairs(
+        sym, "u", "v", "x", "y", cap=_AA_CAP,
+        cap_order=(sp.hash_u32(F.col("v"), "tsdt|aa").asc(), F.col("v").asc()),
     )
-    # r14 two-hop build (the wedge-rewrite pattern, guide §2.3/§2.4/
-    # §2.5): capped neighbor LIST per node behind a user-pinned
-    # exchange (also serves the cap window — same u clustering) + a
-    # bounded in-row pair explode (fan ≤ _AA_CAP), replacing the
-    # nbr⨝nbr self-join: one shuffle of the symmetrized edges instead
-    # of two, no checkpoint (single consumer), and the C(cap,2) pair
-    # expansion runs at defaultParallelism instead of the 1-3 tasks
-    # AQE coalesced the tiny-byte join reduce to.
-    par = spark.sparkContext.defaultParallelism
-    nbl = (
-        sym.repartition(par, "u")
-        .withColumn("__rn", F.row_number().over(wn))
-        .filter(F.col("__rn") <= _AA_CAP)
-        .groupBy("u")
-        .agg(F.sort_array(F.collect_list("v")).alias("__vs"))
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__vs"),
-            lambda p, i: F.transform(
-                F.slice(F.col("__vs"), i + F.lit(2), F.size(F.col("__vs"))),
-                lambda q: F.struct(p.alias("x"), q.alias("y")),
-            ),
-        )
-    )
-    hop2 = nbl.select(
-        F.col("u").alias("__via"), F.explode(pair_structs).alias("__p")
-    ).select("__via", F.col("__p.x").alias("x"), F.col("__p.y").alias("y"))
+    hop2 = hop2.withColumnRenamed("u", "__via")
     term = rd(F.lit(1.0) / F.log2(F.col("d").cast("double")), 6)
     sc = (
         hop2.join(
@@ -1182,35 +1155,12 @@ def _q_graph_jaccard_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         ed.select(F.col("ub").alias("u"), F.col("ua").alias("v"))
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    wn = Window.partitionBy("u").orderBy(
-        sp.hash_u32(F.col("v"), "tsdt|aa").asc(), F.col("v").asc()
+    # two-hop pairs: the graph_adamic_adar_links capped pair explode
+    _, hop2 = gr.neighbor_pairs(
+        sym, "u", "v", "x", "y", cap=_AA_CAP,
+        cap_order=(sp.hash_u32(F.col("v"), "tsdt|aa").asc(), F.col("v").asc()),
     )
-    # r14 two-hop build: the graph_adamic_adar_links neighbor-list
-    # rewrite (one pinned shuffle + bounded in-row pair explode
-    # instead of the nbr⨝nbr self-join; see that query's comment).
-    par = spark.sparkContext.defaultParallelism
-    nbl = (
-        sym.repartition(par, "u")
-        .withColumn("__rn", F.row_number().over(wn))
-        .filter(F.col("__rn") <= _AA_CAP)
-        .groupBy("u")
-        .agg(F.sort_array(F.collect_list("v")).alias("__vs"))
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__vs"),
-            lambda p, i: F.transform(
-                F.slice(F.col("__vs"), i + F.lit(2), F.size(F.col("__vs"))),
-                lambda q: F.struct(p.alias("x"), q.alias("y")),
-            ),
-        )
-    )
-    com = (
-        nbl.select(F.explode(pair_structs).alias("__p"))
-        .select(F.col("__p.x").alias("x"), F.col("__p.y").alias("y"))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
+    com = hop2.groupBy("x", "y").agg(F.count(F.lit(1)).alias("__c"))
     dx = deg.select(F.col("u").alias("x"), F.col("d").alias("__dx"))
     dy = deg.select(F.col("u").alias("y"), F.col("d").alias("__dy"))
     sc = (
@@ -2228,30 +2178,8 @@ def _q_graph_edge_embeddedness(
             .alias("w"),
         )
     )
-    # r14 wedge build (the graph.local_clustering/triangle_count
-    # rewrite, guide §2.3/§2.4/§2.5): neighbor list per apex behind a
-    # user-pinned exchange + bounded in-row pair explode — one shuffle
-    # of the oriented edges instead of a two-exchange self-join whose
-    # CPU-dense reduce AQE coalesced to 3 tasks. `oriented` now has a
-    # single consumer, so its checkpoint is gone too.
-    par = spark.sparkContext.defaultParallelism
-    nb = (
-        oriented.repartition(par, "u")
-        .groupBy("u")
-        .agg(F.sort_array(F.collect_list("w")).alias("__ws"))
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__ws"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ws"), i + F.lit(2), F.size(F.col("__ws"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    wedges = nb.select("u", F.explode(pair_structs).alias("__p")).select(
-        "u", F.col("__p.a").alias("a"), F.col("__p.b").alias("b")
-    )
+    # wedges: per-apex neighbor-list pair explode (`gr.neighbor_pairs`)
+    _, wedges = gr.neighbor_pairs(oriented, "u", "w")
     tri = wedges.join(canon.hint("shuffle_hash"), ["a", "b"]).localCheckpoint(
         eager=False
     )

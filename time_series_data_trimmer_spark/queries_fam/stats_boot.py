@@ -1,8 +1,5 @@
-"""Stats-family tail split (module-size ceiling): the Poisson-
-bootstrap AUC CI block, moved verbatim from queries_fam/stats.py.
-Imported by queries_ext immediately after ``stats`` so the
-registration position of ``eval_bootstrap_auc_ci`` (last of the
-stats block) is unchanged."""
+"""Stats-family tail, split off ``stats`` to keep modules under the
+size ceiling: the Poisson-bootstrap AUC CI block."""
 
 from __future__ import annotations
 

@@ -1,8 +1,4 @@
-"""Text-family extension queries (42 registrations), split out of the former
-monolithic queries_ext.py with block text unchanged. Global
-registration order is restored by queries_ext's reorder —
-do not rely on this module's import order.
-"""
+"""Text-family extension queries."""
 
 from __future__ import annotations
 

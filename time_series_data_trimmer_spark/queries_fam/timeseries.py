@@ -1,8 +1,4 @@
-"""Timeseries-family extension queries (37 registrations), split out of the former
-monolithic queries_ext.py with block text unchanged. Global
-registration order is restored by queries_ext's reorder —
-do not rely on this module's import order.
-"""
+"""Timeseries-family extension queries."""
 
 from __future__ import annotations
 
