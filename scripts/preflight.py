@@ -3,8 +3,9 @@
 commit `5c06510` changed an operator's output schema without running
 any check and voided the whole round's bench).
 
-Run this before ANY commit that touches `time_series_data_trimmer_spark/operators/`
-or `time_series_data_trimmer_spark/queries*` — especially end-of-round snapshots:
+Run this before ANY commit that touches `time_series_data_trimmer_spark/operators/`,
+`time_series_data_trimmer_spark/queries*` or `time_series_data_trimmer_spark/session.py`
+— especially end-of-round snapshots:
 
     python scripts/preflight.py            # changed-module-targeted
     python scripts/preflight.py --all      # full oracle run, every query
@@ -18,7 +19,8 @@ What it does:
 2. Determines affected queries from the files changed per
    `git diff --name-only HEAD` (staged + unstaged + untracked). A
    change to a registry module (`queries.py`, `queries_common.py`,
-   `queries_fam/*`) means every query. Otherwise a query is affected
+   `queries_fam/*`) or to `session.py` (its settings govern every
+   query) means every query. Otherwise a query is affected
    when a package module its code reaches (the globals it names,
    followed through registry helpers and REGISTRY lookups by name)
    is, or transitively imports, a changed module. Runs
@@ -63,6 +65,12 @@ def changed_files() -> list[str]:
 
 def _registry_module(name: str) -> bool:
     return name == f"{PKG}.queries" or name.startswith(f"{PKG}.queries_")
+
+
+def _full_run_module(name: str) -> bool:
+    """A module whose change reaches every query: a registry module,
+    or the session factory, whose settings every query runs under."""
+    return _registry_module(name) or name == f"{PKG}.session"
 
 
 def _pkg_files() -> dict[str, str]:
@@ -159,14 +167,15 @@ def _query_modules(fn, registry, names: set[str]) -> set[str]:
 
 
 def affected_queries(files: list[str]) -> set[str] | None:
-    """None == run everything (a registry module itself changed)."""
+    """None == run everything (a registry module or the session
+    factory changed)."""
     from time_series_data_trimmer_spark.queries_fam import load_registry
 
     registry = load_registry()
     pkg_files = _pkg_files()
     by_file = {path: name for name, path in pkg_files.items()}
     hit = {by_file[f] for f in files if f in by_file}
-    if any(_registry_module(n) for n in hit):
+    if any(_full_run_module(n) for n in hit):
         return None
     if not hit:
         return set()
@@ -202,7 +211,7 @@ def main() -> int:
         files = changed_files()
         aff = affected_queries(files)
         if aff is None:
-            print("preflight: registry file changed -> full oracle run")
+            print("preflight: registry or session file changed -> full oracle run")
             targets = []
         elif not aff:
             print("preflight: no registry-relevant modules changed — done.")

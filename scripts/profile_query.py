@@ -5,7 +5,10 @@ Runs each named query once to warm the JVM, once measured, with the
 Spark event log enabled, then parses the log to report per-stage wall
 time, task count, shuffle read/write bytes and records — the local
 stand-in for the Spark UI's Stages tab (spark.ui.enabled is false in
-the repo session factory).
+the repo session factory). Beside the stage table it prints how many
+classes whole-stage codegen compiled in each run (`CodegenMetrics`);
+a steady run that still compiles means the codegen cache is too small
+for the query.
 
 Usage: python scripts/profile_query.py q1 [q2 ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -21,6 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from time_series_data_trimmer_spark.queries_fam import load_registry
+from time_series_data_trimmer_spark.session import CODEGEN_CACHE_ENTRIES
 
 REGISTRY = load_registry()
 
@@ -46,6 +50,7 @@ def get_profiling_spark():
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.eventLog.enabled", "true")
@@ -108,6 +113,19 @@ def parse_events(path: str, t_mark_ms: float):
     return jobs, stages
 
 
+def codegen_histogram(spark):
+    """Spark's compile-time histogram: its count is every class compiled
+    so far; it keeps a sample of the times (ms), not their sum."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+
+def compiled_since(hist, n0: int) -> str:
+    """Classes compiled since the count was n0, with their time
+    estimated as count × the sampled mean."""
+    n = hist.getCount() - n0
+    return f"{n} classes (~{n * hist.getSnapshot().getMean():.0f} ms)" if n else "0 classes"
+
+
 def main() -> None:
     names = sys.argv[1:]
     spark = get_profiling_spark()
@@ -116,20 +134,25 @@ def main() -> None:
     log_path = os.path.join(LOG_DIR, f"eventlog_v2_{app_id}")
     if not os.path.exists(log_path):
         log_path = os.path.join(LOG_DIR, app_id + ".inprogress")
+    hist = codegen_histogram(spark)
     for name in names:
         if name not in REGISTRY:
             print(f"!! {name}: not in REGISTRY", flush=True)
             continue
         fn, _sql = REGISTRY[name]
         spark.sparkContext.setJobDescription(f"warm:{name}")
+        c0 = hist.getCount()
         t0 = time.time()
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         warm = time.time() - t0
+        warm_compiled = compiled_since(hist, c0)
+        c1 = hist.getCount()
         t_mark_ms = time.time() * 1000.0
         spark.sparkContext.setJobDescription(f"prof:{name}")
         t0 = time.time()
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         steady = time.time() - t0
+        steady_compiled = compiled_since(hist, c1)
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         time.sleep(0.5)
         jobs, stages = parse_events(log_path, t_mark_ms)
@@ -139,6 +162,7 @@ def main() -> None:
             f"\n=== {name}: warm={warm:.2f}s steady={steady:.2f}s "
             f"jobs={jobs} stages={len(stages)} sum_stage_ms={total_stage_ms}"
         )
+        print(f"  codegen: warm {warm_compiled}, steady {steady_compiled}")
         for s in stages[:14]:
             print(
                 f"  stage {s['stage']:>4} {s['ms']:>6} ms {s['tasks']:>4} tasks  {s['name']}"

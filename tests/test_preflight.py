@@ -38,3 +38,10 @@ def test_registry_module_change_means_full_run():
     assert pf.affected_queries([f"{PKG}/queries_fam/compose.py"]) is None
     assert pf.affected_queries([f"{PKG}/queries_common.py"]) is None
     assert pf.affected_queries(["README.md"]) == set()
+
+
+def test_session_change_means_full_run():
+    """The session settings govern every query, though no query's code
+    names `session.py`, so a change to it is a full run."""
+    pf = _preflight()
+    assert pf.affected_queries([f"{PKG}/session.py"]) is None

@@ -133,6 +133,78 @@ def test_kcore_exact_raises_past_cap(spark):
         gr.kcore_exact(chain, ks=(2,), max_rounds=2)
 
 
+def _py_peel(pairs, k, max_rounds=16):
+    """Per-k reference peel in plain Python, with the convergence rule
+    of `kcore_exact`: (n_vertices, n_edges, n_rounds)."""
+    e = set(pairs)
+    for r in range(1, max_rounds + 1):
+        deg = {}
+        for a, b in e:
+            deg[a] = deg.get(a, 0) + 1
+            deg[b] = deg.get(b, 0) + 1
+        nxt = {(a, b) for a, b in e if deg[a] >= k and deg[b] >= k}
+        if len(nxt) == len(e) or not nxt:
+            return len({v for ab in nxt for v in ab}), len(nxt), r
+        e = nxt
+    raise AssertionError("reference peel did not converge")
+
+
+# a 12-vertex chain (k=2 peels it one layer per round) plus a K5 (a
+# 4-core): the ks reach their fixpoints in different rounds
+_CHAIN_K5 = [(i, i + 1) for i in range(11)] + [
+    (a, b) for a in range(20, 25) for b in range(a + 1, 25)
+]
+
+
+def test_kcore_exact_fused_rounds_match_per_k_peel(spark):
+    """All ks peel in one loop; each k's n_rounds is still the round of
+    its own fixpoint, as a separate per-k peel finds it."""
+    from time_series_data_trimmer_spark.operators import graph as gr
+
+    got = {
+        r["k"]: (r["n_vertices"], r["n_edges"], r["n_rounds"])
+        for r in gr.kcore_exact(_edges(spark, _CHAIN_K5), ks=(2, 3, 4, 5)).collect()
+    }
+    want = {k: _py_peel(_CHAIN_K5, k) for k in (2, 3, 4, 5)}
+    assert got == want
+    assert len({r for _, _, r in want.values()}) > 1  # rounds differ by k
+
+
+def test_kcore_exact_cap_error_names_open_k(spark):
+    """At a cap between the ks' fixpoint rounds, the error names only
+    the k that had not converged."""
+    import pytest as _pytest
+
+    from time_series_data_trimmer_spark.operators import graph as gr
+
+    with _pytest.raises(RuntimeError, match="fixed point") as err:
+        gr.kcore_exact(_edges(spark, _CHAIN_K5), ks=(2, 3, 4), max_rounds=3)
+    assert "kcore_exact(k=2)" in str(err.value)
+
+
+def test_checkpoint_observed_counts_equal_count(spark, monkeypatch):
+    """The convergence probe: the observed aggregates equal count() on
+    the returned frame, and the frame is checkpointed eagerly (a lazy
+    checkpoint would leave the observation at 0)."""
+    from time_series_data_trimmer_spark.operators.probe import checkpoint_observed
+
+    df = spark.range(200).select((F.col("id") % 3).alias("k")).groupBy("k", F.col("k") * 7).count()
+    eager_args = []
+    real = type(df).localCheckpoint
+
+    def spy(self, eager=True, *args, **kwargs):
+        eager_args.append(eager)
+        return real(self, eager, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    out, got = checkpoint_observed(
+        df.select("k"), n=F.count(F.lit(1)), n0=F.count_if(F.col("k") == 0)
+    )
+    assert eager_args == [True]
+    assert got == {"n": out.count(), "n0": out.filter(F.col("k") == 0).count()}
+    assert got["n"] == 3
+
+
 # ---------------------------------------------------------------------------
 # r9 wave 3: real-token budget passthrough (VERDICT r8 #6)
 # ---------------------------------------------------------------------------

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from time_series_data_trimmer_spark.operators.probe import checkpoint_observed
+
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2
 DEFAULT_SHINGLE = 3
@@ -800,11 +802,13 @@ def connected_components(
     label changes. Rounds ≈ graph diameter — near-dup clusters are
     dense and shallow (dup chains of length > 20 essentially don't
     occur), so the loop is short; each round is one shuffle of (id,
-    label) longs plus a bounded count() action, and `localCheckpoint`
-    truncates the lineage so the plan never grows. (At extreme
-    diameters the large-star/small-star alternation halves rounds to
-    O(log n); the simple form is kept for determinism and plan
-    clarity.)
+    label) longs, materialized by an eager `localCheckpoint` that
+    truncates the lineage, so the plan never grows. The convergence
+    probe (labels changed this round) is read from that checkpoint's
+    own job (`probe.checkpoint_observed`): no count() action. (At
+    extreme diameters the large-star/small-star alternation halves
+    rounds to O(log n); the simple form is kept for determinism and
+    plan clarity.)
 
     ``all_ids`` (e.g. ``documents.select('doc_id')``) adds singleton
     nodes so every document gets a cluster row.
@@ -813,19 +817,24 @@ def connected_components(
     # md5 → band buckets) is the expensive subtree here, and the lazy
     # form re-executed it once per union side and once per propagation
     # round (~8× at 3 rounds — the dominant cost of every CC consumer).
-    # Checkpoint pairs once, then the symmetrized edge set once; each
-    # round reads materialized (src, dst) longs.
-    p = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
+    # Both directions come from one read of the pairs, and the
+    # symmetrized edge set is checkpointed once; each round reads
+    # materialized (src, dst) longs.
     sym = (
-        p.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(p.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        pairs.select(
+            F.inline(F.array(
+                F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+            ))
+        )
         .distinct()
         .localCheckpoint(eager=False)
     )
     nodes = sym.select(F.col("src").alias(id_col)).distinct()
     if all_ids is not None:
         nodes = nodes.union(all_ids.select(F.col(all_ids.columns[0]).alias(id_col))).distinct()
-    labels = nodes.select(F.col(id_col), F.col(id_col).alias("cluster_id")).localCheckpoint()
+    # read lazily by round 1, whose checkpoint materializes the labels
+    labels = nodes.select(F.col(id_col), F.col(id_col).alias("cluster_id"))
 
     def propagate(lbl):
         nbr_min = (
@@ -835,6 +844,7 @@ def connected_components(
         )
         return lbl.join(nbr_min, id_col, "left").select(
             F.col(id_col),
+            F.col("cluster_id").alias("old"),
             F.least(
                 F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
             ).alias("cluster_id"),
@@ -851,32 +861,26 @@ def connected_components(
             F.col(id_col).alias("__pid"), F.col("cluster_id").alias("__plabel")
         )
         return lbl.join(parent, lbl["cluster_id"] == F.col("__pid")).select(
-            F.col(id_col), F.col("__plabel").alias("cluster_id")
+            F.col(id_col), "old", F.col("__plabel").alias("cluster_id")
         )
 
     converged = False
     for _ in range(max_iter):
-        merged = pointer_jump(propagate(labels)).withColumnRenamed("cluster_id", "new")
-        # r13: checkpoint (id, old, new) ONCE, then derive both the
-        # convergence count and the next labels from the materialized
-        # rows — the previous order ran the round's propagate+join
-        # twice (once for the count() action, once to materialize the
-        # checkpoint).
         # NOTE (r14 checkpoint policy, VERDICT r13 #6): O(nodes) per
-        # round — unbounded. Required: the count() is an action, so a
-        # lazy form would re-execute the round for the next label read
-        # anyway; the per-round snapshot is strictly cheaper than one
-        # recompute and is retired next round (only the latest labels
-        # stay referenced). Executor loss mid-loop fails the job; a
-        # retry restarts the loop from the parquet inputs. On a real
-        # cluster, swap to a reliable checkpoint dir when the restart
-        # cost of a long label chain exceeds snapshot replication.
-        merged = labels.join(merged, id_col).select(
-            F.col(id_col), F.col("cluster_id").alias("old"), F.col("new").alias("cluster_id")
-        ).localCheckpoint()
-        changed = merged.filter(F.col("cluster_id") != F.col("old")).count()
+        # round — unbounded. The next round's propagate joins these
+        # labels twice, so the per-round snapshot is strictly cheaper
+        # than recomputing, and it is retired next round (only the latest
+        # labels stay referenced). Executor loss mid-loop fails the
+        # job; a retry restarts the loop from the parquet inputs. On a
+        # real cluster, swap to a reliable checkpoint dir when the
+        # restart cost of a long label chain exceeds snapshot
+        # replication.
+        merged, probe = checkpoint_observed(
+            pointer_jump(propagate(labels)),
+            changed=F.count_if(F.col("cluster_id") != F.col("old")),
+        )
         labels = merged.select(id_col, "cluster_id")
-        if changed == 0:
+        if probe["changed"] == 0:
             converged = True
             break
     if not converged:

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.functions.rounding import rd
+from time_series_data_trimmer_spark.operators.probe import checkpoint_observed
 
 
 def neighbor_pairs(
@@ -302,6 +303,60 @@ def label_propagation(
     return cur.select(F.col("node").alias(id_col), F.col("lbl").alias(label_col))
 
 
+def _kcore_edges(edges: DataFrame, ks: tuple[int, ...], src_col: str, dst_col: str) -> DataFrame:
+    """The distinct edge list once per ``k``: (k, a, b) longs. One
+    explode of a literal array, no join."""
+    return (
+        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        .distinct()
+        .select(F.explode(F.array(*[F.lit(k) for k in ks])).alias("k"), "a", "b")
+    )
+
+
+def _kcore_degrees(e: DataFrame) -> DataFrame:
+    """(k, v, __deg) over (k, a, b) edges; a self-loop counts twice."""
+    return (
+        e.select("k", F.explode(F.array("a", "b")).alias("v"))
+        .groupBy("k", "v")
+        .agg(F.count(F.lit(1)).alias("__deg"))
+    )
+
+
+def _kcore_round(e: DataFrame) -> DataFrame:
+    """One peel round for every k at once: drop each (k, a, b) edge
+    with an endpoint of degree < k. One (k, vertex)-keyed degree
+    aggregation plus two shuffle-hash semi joins of long rows."""
+    keep = _kcore_degrees(e).filter(F.col("__deg") >= F.col("k")).select("k", "v")
+    return e.join(
+        keep.withColumnRenamed("v", "a").hint("shuffle_hash"), ["k", "a"], "left_semi"
+    ).join(
+        keep.withColumnRenamed("v", "b").hint("shuffle_hash"), ["k", "b"], "left_semi"
+    )
+
+
+def _kcore_summary(e: DataFrame, ks: tuple[int, ...]) -> DataFrame:
+    """One row per k: (k, n_vertices, n_edges) of the surviving (k, a, b)
+    edges, 0s where the core is empty. The per-k zero rows are literals
+    built on the JVM side, so the write starts no Python worker."""
+    zeros = e.sparkSession.range(1).select(
+        F.inline(F.array(*[
+            F.struct(F.lit(k).alias("k"), F.lit(0).alias("__nv"), F.lit(0).cast("long").alias("__deg"))
+            for k in ks
+        ]))
+    )
+    return (
+        _kcore_degrees(e)
+        .select("k", F.lit(1).alias("__nv"), "__deg")
+        .unionByName(zeros)
+        .groupBy("k")
+        .agg(
+            F.sum("__nv").cast("long").alias("n_vertices"),
+            # every edge adds 2 to the degree sum
+            F.expr("sum(__deg) div 2").alias("n_edges"),
+        )
+    )
+
+
 def kcore_bound(
     edges: DataFrame,
     ks: tuple[int, ...] = (2, 3, 4),
@@ -321,70 +376,29 @@ def kcore_bound(
     exposed fringe (most co-occurrence graphs peel to fixpoint in 2-3
     rounds because peeling only cascades along chains). Fixed rounds
     keep the oracle replayable (unrolled CTEs, the PageRank/CC
-    precedent) and the plan bounded: per round, ONE vertex-keyed
-    degree aggregation + two semi joins of (a, b) longs — no
-    per-vertex iteration state, no driver loop over data.
+    precedent) and the plan bounded. All ks peel together over one
+    (k, a, b) table (`_kcore_round`, shared with `kcore_exact`): per
+    round ONE (k, vertex)-keyed degree aggregation + two semi joins of
+    long rows, no per-vertex iteration state, no driver loop over data.
 
     Returns one row per k: (k, n_vertices, n_edges) of the surviving
-    bound.
+    bound, from one aggregation over the last round (`_kcore_summary`).
 
-    Lineage discipline (the CC precedent, re-learned here the hard
-    way): every round references the previous edge set THREE times
-    (twice in the degree union, once in the re-filter), so a fully
-    lazy unroll grows the plan 3^rounds-fold per k — analysis alone
-    took minutes at sf0.001. `localCheckpoint` after the shared canon
-    build and after every round keeps the plan one round deep; each
-    round's edges materialize once and every consumer reads the
-    materialized longs.
-
-    r14 (guide §2.4 iteration discipline): the checkpoints are LAZY —
-    the Catalyst plan is truncated to a LogicalRDD either way, but
-    eager=True forced one blocking materialization JOB per (k, round)
-    cell (9 + canon) where no driver action needs the result; lazy
-    rounds materialize inside the output job's stages instead.
-    Measured ~neutral at sf0.1 (6.5-6.9 s both forms — per-job
-    overhead traded for in-job stages); kept for the scheduling
-    round-trips it removes per k at real scale. Unlike `kcore_exact`,
-    no per-round count() exists to pay for eagerness."""
-    canon = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    out = None
-    for k in ks:
-        e = canon
-        for _ in range(int(rounds)):
-            deg = (
-                e.select(F.col("a").alias("v"))
-                .unionAll(e.select(F.col("b").alias("v")))
-                .groupBy("v")
-                .agg(F.count(F.lit(1)).alias("__deg"))
-            )
-            keep = deg.filter(F.col("__deg") >= int(k)).select("v")
-            e = e.join(
-                keep.withColumnRenamed("v", "a").hint("shuffle_hash"),
-                "a",
-                "left_semi",
-            ).join(
-                keep.withColumnRenamed("v", "b").hint("shuffle_hash"),
-                "b",
-                "left_semi",
-            ).localCheckpoint(eager=False)
-        nv = (
-            e.select(F.col("a").alias("v"))
-            .union(e.select(F.col("b").alias("v")))
-            .distinct()
-            .agg(F.count(F.lit(1)).alias("n_vertices"))
-        )
-        ne = e.agg(F.count(F.lit(1)).alias("n_edges"))
-        row = nv.crossJoin(ne).select(
-            F.lit(int(k)).alias("k"),
-            F.col("n_vertices").cast("long").alias("n_vertices"),
-            F.col("n_edges").cast("long").alias("n_edges"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+    Lineage discipline (the CC precedent): every round references the
+    previous edge set three times (degree, two semi joins), so a fully
+    lazy unroll grows the plan 3^rounds-fold. A lazy `localCheckpoint`
+    after the (k, a, b) build and after every round keeps the plan one
+    round deep. No driver action needs a round's result, so none is
+    eager; AQE still runs the shuffle stages of each checkpointed plan
+    while the frame is built. Measured (pyspark 4.1.2, a 21-edge graph,
+    3 rounds): 10 jobs at construction and 3 in the write, whatever
+    the number of ks; peeling k ∈ {2,3,4} one k at a time took 28 and
+    13."""
+    ks = tuple(dict.fromkeys(int(k) for k in ks))
+    e = _kcore_edges(edges, ks, src_col, dst_col).localCheckpoint(eager=False)
+    for _ in range(int(rounds)):
+        e = _kcore_round(e).localCheckpoint(eager=False)
+    return _kcore_summary(e, ks)
 
 
 def kcore_exact(
@@ -395,15 +409,21 @@ def kcore_exact(
     dst_col: str = "dst",
 ) -> DataFrame:
     """EXACT k-core: loop the peel until FIXED POINT, with the
-    connected-components convergence contract (VERDICT r8 #5) —
-    `localCheckpoint` per round so the plan stays one round deep, a
-    bounded scalar edge-count per round as the convergence probe, and
-    a hard ``max_rounds`` cap that RAISES on non-convergence instead
-    of silently returning a loose bound. `kcore_bound` (fixed 3
-    rounds) stays the cheap screen: its survivor set always CONTAINS
-    the true core but provably hasn't converged on deep peel cascades
-    (a chain graph sheds only its two endpoints per round); this form
-    is the authority when exactness matters.
+    connected-components convergence contract (VERDICT r8 #5) — an
+    eager `localCheckpoint` per round so the plan stays one round deep,
+    the round's per-k edge counts as the convergence probe, and a hard
+    ``max_rounds`` cap that RAISES on non-convergence instead of
+    silently returning a loose bound. `kcore_bound` (fixed 3 rounds)
+    stays the cheap screen: its survivor set always CONTAINS the true
+    core but provably hasn't converged on deep peel cascades (a chain
+    graph sheds only its two endpoints per round); this form is the
+    authority when exactness matters.
+
+    All ks peel together over one (k, a, b) table (`_kcore_round`), so
+    the loop runs max-over-k rounds, not the sum. The probe costs no
+    job: `probe.checkpoint_observed` reads the per-k edge counts from
+    each round's own checkpoint job. A k that has converged stays in
+    the table, where further rounds are the identity.
 
     Soundness of the probe: a peel round deletes vertices with
     0 < deg < k, and every such deletion removes at least one edge —
@@ -415,64 +435,30 @@ def kcore_exact(
     within the cap, and extra oracle rounds are no-ops.
 
     Returns one row per k: (k, n_vertices, n_edges, n_rounds) where
-    ``n_rounds`` is the round at which the fixpoint was certified.
-    Plan shape per round is `kcore_bound`'s: one vertex-keyed degree
-    aggregation + two shuffle-hash semi joins over materialized long
-    pairs; the driver holds only one scalar per round.
+    ``n_rounds`` is the round at which k's fixpoint was certified.
     """
-    canon = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    out = None
-    for k in ks:
-        e = canon
-        n_prev = e.count()
-        n_rounds = 0
-        for r in range(1, int(max_rounds) + 1):
-            deg = (
-                e.select(F.col("a").alias("v"))
-                .unionAll(e.select(F.col("b").alias("v")))
-                .groupBy("v")
-                .agg(F.count(F.lit(1)).alias("__deg"))
-            )
-            keep = deg.filter(F.col("__deg") >= int(k)).select("v")
-            e = e.join(
-                keep.withColumnRenamed("v", "a").hint("shuffle_hash"),
-                "a",
-                "left_semi",
-            ).join(
-                keep.withColumnRenamed("v", "b").hint("shuffle_hash"),
-                "b",
-                "left_semi",
-            ).localCheckpoint()
-            n_cur = e.count()
-            if n_cur == n_prev or n_cur == 0:
-                n_rounds = r
-                break
-            n_prev = n_cur
-        else:
-            raise RuntimeError(
-                f"kcore_exact(k={k}) did not reach a fixed point within "
-                f"max_rounds={max_rounds}; raise the cap (peel depth is "
-                f"data-dependent on chain-like fringes)"
-            )
-        nv = (
-            e.select(F.col("a").alias("v"))
-            .union(e.select(F.col("b").alias("v")))
-            .distinct()
-            .agg(F.count(F.lit(1)).alias("n_vertices"))
+    ks = tuple(dict.fromkeys(int(k) for k in ks))
+    counts = {f"n{k}": F.count_if(F.col("k") == k) for k in ks}
+    e, n_prev = checkpoint_observed(_kcore_edges(edges, ks, src_col, dst_col), **counts)
+    n_rounds: dict[int, int] = {}
+    for r in range(1, int(max_rounds) + 1):
+        e, n_cur = checkpoint_observed(_kcore_round(e), **counts)
+        for k in ks:
+            c = n_cur[f"n{k}"]
+            if k not in n_rounds and (c == n_prev[f"n{k}"] or c == 0):
+                n_rounds[k] = r
+        if len(n_rounds) == len(ks):
+            break
+        n_prev = n_cur
+    else:
+        open_ks = ", ".join(str(k) for k in ks if k not in n_rounds)
+        raise RuntimeError(
+            f"kcore_exact(k={open_ks}) did not reach a fixed point within "
+            f"max_rounds={max_rounds}; raise the cap (peel depth is "
+            f"data-dependent on chain-like fringes)"
         )
-        ne = e.agg(F.count(F.lit(1)).alias("n_edges"))
-        row = nv.crossJoin(ne).select(
-            F.lit(int(k)).alias("k"),
-            F.col("n_vertices").cast("long").alias("n_vertices"),
-            F.col("n_edges").cast("long").alias("n_edges"),
-            F.lit(int(n_rounds)).alias("n_rounds"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+    by_k = F.create_map(*[F.lit(x) for k in ks for x in (k, n_rounds[k])])
+    return _kcore_summary(e, ks).withColumn("n_rounds", by_k[F.col("k")])
 
 
 def local_clustering(

@@ -713,9 +713,10 @@ def _q_graph_kcore_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex survives the k-peel only if k of its peers ALSO keep k
     peers after the fringe is stripped. Same bounded co-occurrence
     edges as `graph_triangle_count_cooc` (distinct-collapsed,
-    per-block sorted-neighborhood cap), then per (k, round): one
-    vertex-keyed degree agg + two semi joins of long pairs — fixed
-    3×3 round grid, oracle unrolled verbatim. Fixed rounds converge
+    per-block sorted-neighborhood cap), then 3 rounds that peel every
+    k at once over one (k, a, b) table: per round one (k, vertex)-keyed
+    degree agg + two semi joins of long rows; the oracle unrolls the
+    same 3×3 (k, round) grid. Fixed rounds converge
     from above (survivors ⊇ true k-core); the bound tightens one
     fringe layer per round."""
     from time_series_data_trimmer_spark.operators import graph as _gr
@@ -881,8 +882,9 @@ def _q_graph_kcore_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT k-core over the user co-occurrence graph
     (`graph.kcore_exact`, VERDICT r8 #5): the peel LOOPS UNTIL FIXED
     POINT under the connected-components convergence contract —
-    localCheckpoint per round, an edge-count probe per round (unchanged
-    count certifies no vertex sits below k), and a hard
+    all ks peel together, one eager localCheckpoint per round, whose
+    own job also yields the per-k edge counts (an unchanged count
+    certifies no vertex sits below k; no count() job), and a hard
     ``max_rounds=16`` cap that raises instead of returning a loose
     bound. `graph_kcore_bound` stays the fixed-3-round screen; this is
     the authority (a chain fringe peels one layer per round, so 3
